@@ -1,0 +1,12 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object Bus {
+
+  /** Block until every event posted so far has reached every listener,
+    * so counters read after a pass cover that whole pass.
+    */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
