@@ -54,6 +54,8 @@ object Profile {
     // shows the full end-to-end plan instead of post-checkpoint stubs.
     // Plan-audit only — see the switch's scaladoc in graft.ckpt.
     val noCkptFlag = args.contains("--no-ckpt")
+    require(!noCkptFlag || explainFlag,
+      "--no-ckpt is plan-audit only (it voids GlobalRank's frozen-block contract); pass --explain")
     val qArgs = args.toSeq.filterNot(a =>
       a == "--explain" || a == "--stages" || a == "--no-ckpt")
     val names = if (qArgs.nonEmpty) qArgs else SparkEntry.queries.keys.toSeq.sorted

@@ -114,16 +114,19 @@ package object graft {
 
   /** Width for the EXPLICIT exchanges the operators plant mid-plan
     * (ckptBy layouts, the anti-AQE-coalesce repartitions before
-    * CPU-heavy aggregates): the configured shuffle width, floored at
-    * the core count. Locally both are the core count, so the bench is
-    * unchanged; on a cluster `spark.sql.shuffle.partitions` is sized to
-    * the data (thousands), so these exchanges scale with the deployment
+    * CPU-heavy aggregates, the sessionizer's required distribution):
+    * the session's shuffle width, floored at the core count. The width is
+    * the planner's typed `numShufflePartitions`, never a parse of the
+    * string conf, which some platforms set to "auto". Locally both are
+    * the core count, so the bench is unchanged; on a cluster
+    * `spark.sql.shuffle.partitions` is sized to the data (thousands), so these exchanges scale with the deployment
     * instead of collapsing a corpus onto one-partition-per-core
     * (r21 VERDICT item 3 — no fixed local width survives at 100 TB).
     */
   def spreadWidth(spark: org.apache.spark.sql.SparkSession): Int =
     math.max(spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions", "0").toInt)
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.conf.numShufflePartitions)
 
   /** `.ckpt()` postfix form of [[ckpt]] — in scope throughout `graft.*`
     * via this enclosing package object.

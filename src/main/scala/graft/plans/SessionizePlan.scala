@@ -87,9 +87,16 @@ object SessionizePlan {
         throw new IllegalArgumentException(
           s"sessionize child must produce column '$name'; got ${child.output.map(_.name)}"))
 
-    /** All of one taxi's rows in one partition... */
+    /** All of one taxi's rows in one partition, across exactly
+      * [[graft.spreadWidth]] partitions: the FSM runs as that many tasks.
+      * A required partition count is part of the distribution, so AQE's
+      * coalescing, which would fold this one exchange into a single task
+      * on a small input, fails its re-validation and is not applied; the
+      * plan still has exactly one exchange.
+      */
     override def requiredChildDistribution: Seq[Distribution] =
-      ClusteredDistribution(Seq(childAttr("taxi"))) :: Nil
+      ClusteredDistribution(Seq(childAttr("taxi")),
+        requiredNumPartitions = Some(graft.spreadWidth(session))) :: Nil
 
     /** ...sorted by the reference's composite key (J1-10). */
     override def requiredChildOrdering: Seq[Seq[SortOrder]] =

@@ -1,7 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.TextInputFormat
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Readers for the reference's two text formats (FIXTURES.md §A):
   *
@@ -10,11 +16,16 @@ import org.apache.spark.sql.functions._
   *  - `trips`: space-separated, 11 fields
   *    (/root/reference/src/SparkTripLength.java:31,44-49).
   *
-  * Both readers are schema-on-read over `spark.read.text` — dirty rows are
-  * dropped by downstream filters, never errors, matching the reference's
-  * drop-don't-fail contract. `.gz` inputs decompress transparently but are
-  * single-partition (same physics as the reference; prefer uncompressed or
-  * parquet at scale).
+  * Both readers are schema-on-read over one line source with
+  * `spark.read.text`'s rows — dirty rows are dropped by downstream
+  * filters, never errors, matching the reference's drop-don't-fail
+  * contract. Plain text splits into at least the core count
+  * (`defaultParallelism`) partitions. The split hint is per read because
+  * the file scan's only split knobs (`spark.sql.files.maxPartitionBytes`,
+  * `openCostInBytes`) are session-wide, and lowering them there splits
+  * every parquet scan into empty tasks. Whole-file codecs (`.gz`, …)
+  * decompress transparently but stay one partition (same physics as the
+  * reference; see [[warnIfNotSplittable]]).
   */
 object TaxiText {
 
@@ -41,13 +52,29 @@ object TaxiText {
     hit && cores > 1
   }
 
+  /** The lines of `path` as a one-column `value` frame, split into at
+    * least `defaultParallelism` pieces. Same line splitting (`\n`, `\r`,
+    * `\r\n`) and same raw bytes as `spark.read.text`: the line's bytes go
+    * into the row undecoded, so invalid UTF-8 is not replaced.
+    */
+  private[graft] def lines(spark: SparkSession, path: String): DataFrame = {
+    val sc = spark.sparkContext
+    val rows = sc.hadoopFile(path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
+        sc.defaultParallelism)
+      .mapPartitions { it =>
+        val w = new UnsafeRowWriter(1)
+        it.map { case (_, t) => w.reset(); w.write(0, t.getBytes, 0, t.getLength); w.getRow: InternalRow }
+      }
+    Bridge.internalCreateDataFrame(spark, rows, StructType(Seq(StructField("value", StringType))))
+  }
+
   /** Raw segment lines split into a 9-element string array column `f`.
     * Arity != 9 rows are dropped here (AirportTripsRevenue.java:155-157);
     * all other cleaning happens in the trip-reconstruction pipeline.
     */
   def readSegments(spark: SparkSession, path: String): DataFrame = {
     warnIfNotSplittable(spark, path)
-    spark.read.text(path)
+    lines(spark, path)
       .select(split(regexp_replace(col("value"), "'", ""), ",", -1).as("f"))
       .filter(size(col("f")) === 9)
   }
@@ -63,7 +90,7 @@ object TaxiText {
     // dropping the row.
     def d(i: Int) = expr(s"try_cast(f[${i - 1}] AS double)")
     warnIfNotSplittable(spark, path)
-    spark.read.text(path)
+    lines(spark, path)
       .select(f.as("f"))
       .filter(size(col("f")) === 11)
       .select(

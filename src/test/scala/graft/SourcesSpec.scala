@@ -51,7 +51,7 @@ class SourcesSpec extends AnyFunSuite {
       .collect().map(_.toString).toList
     assert(viaGz == plain)
     // the .gz is a single split — document the physics the reference had
-    assert(spark.read.text(gzFile.toString).rdd.getNumPartitions == 1)
+    assert(TaxiText.readSegments(spark, gzFile.toString).rdd.getNumPartitions == 1)
     // and the reader WARNS about it (SURVEY §4: the reference's own gzip
     // pitfall, report.pdf p.3) — fires for non-splittable codecs on a
     // parallel session, stays quiet for plain text
@@ -59,6 +59,34 @@ class SourcesSpec extends AnyFunSuite {
     assert(TaxiText.warnIfNotSplittable(spark, "any/path/data.zst"))
     assert(!TaxiText.warnIfNotSplittable(spark, s"$dir/segments.txt"))
     assert(!TaxiText.warnIfNotSplittable(spark, "data.snappy.parquet"))
+  }
+
+  test("plain-text readers split to at least the core count") {
+    val cores = spark.sparkContext.defaultParallelism
+    val segs = TaxiText.readSegments(spark, s"$dir/segments.txt").rdd.getNumPartitions
+    val trips = TaxiText.readTrips(spark, s"$dir/trips.txt").rdd.getNumPartitions
+    assert(segs >= cores, s"segments: $segs partitions on $cores cores")
+    assert(trips >= cores, s"trips: $trips partitions on $cores cores")
+  }
+
+  test("line source returns exactly spark.read.text's rows, byte for byte") {
+    def bytesOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(hex(col("value").cast("binary"))).collect().map(_.getString(0)).toSeq
+    def same(path: String): Unit =
+      assert(bytesOf(TaxiText.lines(spark, path)) == bytesOf(spark.read.text(path)), path)
+    same(s"$dir/segments.txt")
+    same(s"$dir/trips.txt")
+    // CRLF endings, an empty line, an invalid UTF-8 byte and no final
+    // newline; each lead-in shifts where the core-count splits cut
+    val body = "a,b\r\n\r\nc d\r\n".getBytes("UTF-8") ++ Array[Byte](0x62, 0xff.toByte, 0x63) ++
+      "\r\n\nlast".getBytes("UTF-8")
+    val base = Files.createTempDirectory("graft-lines")
+    base.toFile.deleteOnExit()
+    (0 to 3).foreach { lead =>
+      val f = base.resolve(s"lines$lead.txt")
+      Files.write(f, ("x" * lead).getBytes("UTF-8") ++ body)
+      same(f.toString)
+    }
   }
 
   test("recompress: gz text lands as splittable parquet with the byte-identity contract") {

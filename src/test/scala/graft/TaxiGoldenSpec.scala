@@ -19,13 +19,13 @@ class TaxiGoldenSpec extends AnyFunSuite {
     try src.getLines().toList finally src.close()
   }
 
-  test("Q1 histogram matches golden") {
+  private def checkQ1(): Unit = {
     val got = TaxiQueries.q1(spark, s"$dir/trips.txt")
       .collect().map(r => s"${r.getString(0)}\t${r.getLong(1)}").toList
     assert(got == golden("golden_q1.txt"))
   }
 
-  test("Q2 reconstructed airport trips match golden byte-for-byte") {
+  private def checkTrips(): Unit = {
     val got = TaxiQueries.formatTrips(
         TaxiQueries.reconstructTrips(spark, TaxiText.readSegments(spark, s"$dir/segments.txt")))
       .collect().map(_.getString(0)).sorted.toList
@@ -34,7 +34,7 @@ class TaxiGoldenSpec extends AnyFunSuite {
     got.zip(want).foreach { case (g, w) => assert(g == w) }
   }
 
-  test("Q2 daily revenue matches golden") {
+  private def checkDaily(): Unit = {
     val got = TaxiQueries.q2Daily(spark).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toList
     val want = golden("golden_q2_daily.txt").map { l =>
@@ -44,10 +44,30 @@ class TaxiGoldenSpec extends AnyFunSuite {
     got.zip(want).foreach { case ((_, g), (_, w)) => assert(math.abs(g - w) < 1e-6) }
   }
 
-  test("Q2 grand total matches golden") {
+  private def checkTotal(): Unit = {
     val got = TaxiQueries.q2Total(spark).collect()(0).getDouble(0)
     val want = golden("golden_q2_total.txt").head.toDouble
     assert(math.abs(got - want) < 1e-6)
+  }
+
+  test("Q1 histogram matches golden")(checkQ1())
+
+  test("Q2 reconstructed airport trips match golden byte-for-byte")(checkTrips())
+
+  test("Q2 daily revenue matches golden")(checkDaily())
+
+  test("Q2 grand total matches golden")(checkTotal())
+
+  test("Q1 and Q2 match the goldens at shuffle.partitions 1 and 7, AQE on and off") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try for (n <- Seq("1", "7"); aqe <- Seq("true", "false")) {
+      spark.conf.set(keys(0), n)
+      spark.conf.set(keys(1), aqe)
+      withClue(s"shuffle.partitions=$n adaptive=$aqe: ") {
+        checkQ1(); checkTrips(); checkDaily(); checkTotal()
+      }
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("custom-plan sessionizer == typed mapPartitions sessionizer, one exchange in plan") {
@@ -61,6 +81,18 @@ class TaxiGoldenSpec extends AnyFunSuite {
     // exactly one shuffle stage in the final (AQE) plan; the printed string
     // repeats the pre-AQE "Initial Plan", so count shuffle query stages
     assert("ShuffleQueryStage".r.findAllIn(physical).size == 1, s"expected 1 shuffle:\n$physical")
+  }
+
+  test("sessionizer exchange keeps spreadWidth partitions: AQE does not coalesce it") {
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val trips = TaxiQueries.reconstructTrips(spark, TaxiText.readSegments(spark, s"$dir/segments.txt"))
+    trips.collect()
+    val plan = trips.queryExecution.executedPlan
+    val fsm = H.collect(plan) { case s: graft.plans.SessionizePlan.SessionizeTripsExec => s }
+    assert(fsm.size == 1, plan.toString)
+    // what the FSM reads: the stage's output after any AQE shuffle read
+    assert(fsm.head.child.outputPartitioning.numPartitions == graft.spreadWidth(spark),
+      s"FSM input is not spreadWidth wide:\n$plan")
   }
 
   test("Q2 is permutation-invariant in input row order") {
