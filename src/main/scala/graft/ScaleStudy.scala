@@ -533,36 +533,20 @@ object ScaleStudy {
           events.select((col("user_id") + lit(r * maxUser)).as("user_id"), col("us"),
             (col("event_id") * k + lit(r)).as("event_id"), col("event_type"))
         }.reduce(_ unionByName _)
-        val spool = java.nio.file.Files.createTempDirectory("graft_scale_stream")
-        try {
-          val feedDir = spool.resolve("feed").toString
-          graft.queries.StreamingQueries.spoolChronological(scaled, feedDir, 3)
-          val nRows = spark.read.parquet(feedDir).count()
-          val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions", "4")
-          val name = s"scale_stream_$k"
-          val t0 = System.nanoTime()
-          val q = graft.queries.StreamingQueries.intervalJoinStream(
-              spark.readStream.schema(scaled.schema)
-                .option("maxFilesPerTrigger", "1").parquet(feedDir), 1800L)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          val (nPairs, maxState, removed) =
-            try {
-              q.processAllAvailable()
-              val sts = q.recentProgress.flatMap(_.stateOperators.map(_.numRowsTotal))
-              (spark.table(name).count(),
-                if (sts.nonEmpty) sts.max else 0L,
-                q.recentProgress.flatMap(_.stateOperators.map(_.numRowsRemoved)).sum)
-            } finally {
-              q.stop()
-              spark.catalog.dropTempView(name)
-              spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-            }
-          val wall = (System.nanoTime() - t0) / 1e9
-          println(f"""{"op":"stream_join_scale","scale":$k,"rows":$nRows,"pairs":$nPairs,"max_state":$maxState,"evicted":$removed,"wall_sec":$wall%.2f}""")
-        } finally graft.sources.LayoutCache.deleteTree(spool)
+        var nRows = 0L
+        var t0 = 0L
+        val (nPairs, maxState, removed) = graft.queries.StreamingQueries.replay(
+            spark, "scale", scaled,
+            beforeStart = r => { nRows = spark.read.parquet(r.feedDir).count(); t0 = System.nanoTime() })(
+          (r, stream) => graft.queries.StreamingQueries.intervalJoinStream(stream, 1800L)
+            .writeStream.format("memory").queryName(r.view).outputMode("append")) { (r, q) =>
+          val sts = q.recentProgress.flatMap(_.stateOperators.map(_.numRowsTotal))
+          (spark.table(r.view).count(),
+            if (sts.nonEmpty) sts.max else 0L,
+            q.recentProgress.flatMap(_.stateOperators.map(_.numRowsRemoved)).sum)
+        }
+        val wall = (System.nanoTime() - t0) / 1e9
+        println(f"""{"op":"stream_join_scale","scale":$k,"rows":$nRows,"pairs":$nPairs,"max_state":$maxState,"evicted":$removed,"wall_sec":$wall%.2f}""")
       }
     }
     // x87 SemDeDup at 1×/3×/10× — BOTH scale postures, because the

@@ -2,32 +2,28 @@ package graft.queries
 
 import graft.{CkptOps, Tables}
 import graft.streaming.{GapEvent, StreamingGapSessionize}
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Driver-visible Structured Streaming query: runs the streaming gap
-  * sessionizer ([[StreamingGapSessionize]]) end to end inside the batch
-  * driver contract and reshapes its closed sessions to q8's exact schema,
-  * so the SAME DuckDB oracle that checks the batch operator hash-checks
-  * the streaming twin — the stream-equals-batch guarantee moves from a
-  * ScalaTest assertion into the driver's hard signal.
+/** The driver-visible Structured Streaming rows. Every row runs through
+  * one spool-replay runner ([[replay]]) whose contract is:
   *
-  * The feed is stream-native: the event table is written to a spool
-  * directory as time-ranged parquet files and the sessionizer reads them
-  * through a FILE STREAM source (`maxFilesPerTrigger = 1`, one micro-batch
-  * per file — the same shape as a production directory-watching ingest).
-  * Nothing is ever materialized on the driver: the spool write is a
-  * distributed job, and each micro-batch flows scan → state store → sink
-  * entirely on executors. `repartitionByRange` over event time makes file
-  * k chronologically precede file k+1 (equal timestamps land in one file),
-  * so per-user event order across micro-batches is non-decreasing and the
-  * stream reproduces the batch sessionization bit for bit; disorder
-  * WITHIN a micro-batch is handled by the operator (and exercised, with
-  * genuine cross-batch disorder, in StreamingSpec).
+  *  - the feed is spooled CHRONOLOGICALLY ([[spoolChronological]]) as
+  *    time-ranged parquet files with ascending mtimes;
+  *  - a file-stream source replays them ONE MICRO-BATCH PER FILE;
+  *  - the stream runs under a SCOPED shuffle width ([[StreamParts]]),
+  *    restored afterwards;
+  *  - the result is MATERIALIZED BEFORE TEARDOWN: nothing a row returns
+  *    reads the spool, the checkpoint or a memory sink once the query is
+  *    stopped, its sink view dropped and its scratch deleted.
+  *
+  * A row states only its streaming plan, its sink and its post-sink
+  * reduction.
   */
 object StreamingQueries {
 
@@ -38,11 +34,9 @@ object StreamingQueries {
   /** Number of time-range spool files = number of event micro-batches the
     * sessionizer sees (plus one for the sentinel flush). 3 keeps
     * cross-batch state handoff exercised without paying unbounded
-    * per-batch state-store fixed costs locally. Overridable for
-    * measurement (-Dgraft.stream.feedfiles=N).
+    * per-batch state-store fixed costs locally.
     */
-  private def FeedFiles: Int =
-    sys.props.getOrElse("graft.stream.feedfiles", "3").toInt
+  private val FeedFiles = 3
 
   /** Shuffle-partition count while a streaming stage runs (scoped per
     * query, restored after). Each partition opens/commits its state
@@ -51,10 +45,9 @@ object StreamingQueries {
     * the heaviest consumer (x39, four state stores per partition): 8 →
     * ~4.9 s, 4 → ~3.7 s, 2 → ~3.3 s per run at sf0.1. 4 keeps the
     * fixture's ~150 keys parallel while halving the fixed cost; 2 saves
-    * little more and under-parallelizes the per-batch scan. Overridable
-    * for measurement (-Dgraft.stream.parts=N).
+    * little more and under-parallelizes the per-batch scan.
     */
-  private def streamParts: String = sys.props.getOrElse("graft.stream.parts", "4")
+  private val StreamParts = "4"
 
   /** Scratch root for spool + checkpoint of the streaming ledger rows.
     * Prefers a tmpfs (`/dev/shm`) when one is writable: every micro-batch
@@ -180,8 +173,8 @@ object StreamingQueries {
     System.err.println(s"[$tag] spool=${spoolMs}ms run=${runMs}ms " +
       s"batches=${trig.mkString("+")}ms stateCommit=${commit.mkString("+")}ms " +
       s"plan=${dur("queryPlanning").sum}ms addBatch=${dur("addBatch").sum}ms " +
-      s"wal=${(dur("walCommit"), dur("commitOffsets")).zipped.map(_ + _).sum}ms " +
-      s"getBatch=${(dur("getBatch"), dur("latestOffset")).zipped.map(_ + _).sum}ms")
+      s"wal=${dur("walCommit").lazyZip(dur("commitOffsets")).map(_ + _).sum}ms " +
+      s"getBatch=${dur("getBatch").lazyZip(dur("latestOffset")).map(_ + _).sum}ms")
   }
 
   private def deleteRecursively(p: Path): Unit =
@@ -190,6 +183,14 @@ object StreamingQueries {
       try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
       finally s.close()
     }
+
+  /** The `part-*` files of a parquet directory, in name order. */
+  private def partFiles(dir: String): Array[Path] = {
+    val listing = Files.list(Paths.get(dir))
+    try listing.sorted().toArray.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.startsWith("part-"))
+    finally listing.close()
+  }
 
   /** Spool `events` into `n` time-ranged parquet files (ranged on `tsCol`)
     * with strictly ascending mtimes, so a file-stream source replays them
@@ -202,33 +203,86 @@ object StreamingQueries {
       .sortWithinPartitions(tsCol)
       .write.mode("overwrite").parquet(feedDir)
     val base = System.currentTimeMillis() - 1000L * 3600
-    val listing = Files.list(java.nio.file.Paths.get(feedDir))
-    val partFiles =
-      try listing.sorted().toArray.map(_.asInstanceOf[Path])
-        .filter(_.getFileName.toString.startsWith("part-"))
-      finally listing.close()
-    partFiles.zipWithIndex.foreach { case (p, i) =>
+    partFiles(feedDir).zipWithIndex.foreach { case (p, i) =>
       require(p.toFile.setLastModified(base + i * 1000L),
         s"cannot stamp spool-file mtime on $p — chronological replay not guaranteed")
     }
   }
 
-  /** Streaming first-touch (first-seen-per-key dedup): each user's FIRST
-    * event by (event time, event_id), maintained as streaming-aggregation
-    * state across micro-batches and emitted in UPDATE mode. This is the
-    * streaming ingest-dedup pattern — keep the first occurrence per key,
-    * drop the rest — built on `min(struct(us, event_id, cents))` rather
-    * than `dropDuplicates`, because a struct-min is COMMUTATIVE: the
-    * result is bit-identical under any arrival order or batch boundary
-    * placement (dropDuplicates keeps the first ARRIVAL, which is
-    * nondeterministic within a micro-batch). No watermark needed: state
-    * is one struct per key by construction, and a production deployment
-    * bounds key cardinality, not time.
-    *
-    * The update-mode memory sink receives one row per (key, batch-where-
-    * it-changed); the final state is recovered with the SAME commutative
-    * min over the sink — no order assumption on sink rows either.
+  /** One replay's scratch: `spool` holds the feed, the checkpoint and any
+    * file-sink output; `view` is the name a memory sink registers under.
     */
+  private[graft] final case class Replay(spool: Path, view: String) {
+    def feedDir: String = dir("feed")
+    def dir(sub: String): String = spool.resolve(sub).toString
+  }
+
+  /** The spool-replay runner every streaming row goes through: spool
+    * `feed` chronologically on `tsCol`, replay it one micro-batch per file
+    * into the writer `sink` builds over the stream, drain it under the
+    * scoped [[StreamParts]] shuffle width, log [[streamCrumb]], and return
+    * `materialize`'s result — which must be computed (ckpt'd) here,
+    * because on the way out the query stops, the memory-sink view (if the
+    * sink used `r.view`) is dropped, the shuffle width is restored, and a
+    * runner-allocated spool is deleted. `spool = None` allocates scratch
+    * under [[streamScratchDir]]; a given spool is the caller's to delete.
+    * Two hooks: `beforeStart` runs after the spool is written, before the
+    * stream starts (x45 adds redelivery copies there); `afterDrain` runs
+    * after the first drain, before the breadcrumb (x26 appends its flush
+    * sentinel and drains again).
+    */
+  private[graft] def replay[T](spark: SparkSession, tag: String, feed: DataFrame,
+                               tsCol: String = "us", spool: Option[Path] = None,
+                               beforeStart: Replay => Unit = _ => (),
+                               afterDrain: (Replay, StreamingQuery) => Unit = (_, _) => ())(
+                               sink: (Replay, DataFrame) => DataStreamWriter[_])(
+                               materialize: (Replay, StreamingQuery) => T): T = {
+    val r = Replay(spool.getOrElse(streamScratchDir(s"graft_stream_${tag}_")),
+      s"graft_stream_${tag}_${runSeq.incrementAndGet()}")
+    try {
+      val t0 = System.nanoTime()
+      spoolChronological(feed, r.feedDir, FeedFiles, tsCol)
+      beforeStart(r)
+      val tSpool = System.nanoTime()
+      val stream = spark.readStream
+        .schema(feed.schema)
+        .option("maxFilesPerTrigger", "1") // one micro-batch per range file
+        .parquet(r.feedDir)
+      // The streaming stage runs EAGERLY here, so scoping the shuffle
+      // width to it is safe — what a row returns reads only the
+      // materialized result. Fewer partitions = fewer state-store
+      // instances to open/commit per micro-batch.
+      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", StreamParts)
+      try {
+        val q = sink(r, stream).option("checkpointLocation", r.dir("ckpt")).start()
+        try {
+          q.processAllAvailable()
+          afterDrain(r, q)
+          streamCrumb(tag, t0, tSpool, q)
+          materialize(r, q)
+        } finally q.stop()
+      } finally {
+        // repeated bench/verify invocations must not pin one full result
+        // copy per run in driver memory for the session lifetime
+        spark.catalog.dropTempView(r.view)
+        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
+    } finally if (spool.isEmpty) deleteRecursively(r.spool)
+  }
+
+  /** [[replay]] into a memory sink: `plan` maps the replayed stream to the
+    * row's streaming result, written in output `mode`; returns the sink
+    * contents, ckpt'd.
+    */
+  private def replayToMemory(spark: SparkSession, tag: String, feed: DataFrame,
+                             mode: String, tsCol: String = "us",
+                             afterDrain: (Replay, StreamingQuery) => Unit = (_, _) => ())(
+                             plan: DataFrame => Dataset[_]): DataFrame =
+    replay(spark, tag, feed, tsCol, afterDrain = afterDrain)(
+      (r, stream) => plan(stream).writeStream.format("memory").queryName(r.view).outputMode(mode))(
+      (r, _) => spark.table(r.view).ckpt())
+
   /** The one commutative aggregation both the streaming stage and the
     * sink-reduction use — a single definition, so they cannot drift.
     */
@@ -248,40 +302,27 @@ object StreamingQueries {
         (col("first.cents").cast("double") / 100).as("first_value"))
       .orderBy("user_id")
 
+  /** Streaming first-touch (first-seen-per-key dedup): each user's FIRST
+    * event by (event time, event_id), maintained as streaming-aggregation
+    * state across micro-batches and emitted in UPDATE mode. This is the
+    * streaming ingest-dedup pattern — keep the first occurrence per key,
+    * drop the rest — built on `min(struct(us, event_id, cents))` rather
+    * than `dropDuplicates`, because a struct-min is COMMUTATIVE: the
+    * result is bit-identical under any arrival order or batch boundary
+    * placement (dropDuplicates keeps the first ARRIVAL, which is
+    * nondeterministic within a micro-batch). No watermark needed: state
+    * is one struct per key by construction, and a production deployment
+    * bounds key cardinality, not time.
+    *
+    * The update-mode memory sink receives one row per (key, batch-where-
+    * it-changed); the final state is recovered with the SAME commutative
+    * min over the sink — no order assumption on sink rows either.
+    */
   def firstTouch(spark: SparkSession, dir: String): DataFrame = {
     val events = Tables.load(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"),
         (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-    val spool = streamScratchDir("graft_stream_touch")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_touch_${runSeq.incrementAndGet()}"
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(events, feedDir, FeedFiles)
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val finalState =
-        try {
-          val q = firstTouchAgg(stream)
-            .writeStream.format("memory").queryName(name).outputMode("update")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          try {
-            q.processAllAvailable()
-            streamCrumb("x36", t0, tSpool, q)
-            spark.table(name).ckpt()
-          } finally q.stop()
-        } finally {
-          spark.catalog.dropTempView(name)
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      firstTouchFinal(finalState)
-    } finally deleteRecursively(spool)
+    firstTouchFinal(replayToMemory(spark, "x36", events, "update")(firstTouchAgg))
   }
 
   /** x61: STREAMING CDC apply — the q30 warehouse ingest primitive run
@@ -303,42 +344,15 @@ object StreamingQueries {
     val events = Tables.load(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"),
         col("event_type"), col("value"))
-    val spool = streamScratchDir("graft_stream_cdc")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_cdc_${runSeq.incrementAndGet()}"
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(events, feedDir, FeedFiles)
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val finalState =
-        try {
-          val q = stream.groupBy(col("user_id"))
-            .agg(max(struct(col("us"), col("event_id"), col("event_type"), col("value")))
-              .as("last"))
-            .writeStream.format("memory").queryName(name).outputMode("update")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          try {
-            q.processAllAvailable()
-            streamCrumb("x61", t0, tSpool, q)
-            spark.table(name).ckpt()
-          } finally q.stop()
-        } finally {
-          spark.catalog.dropTempView(name)
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      val last = finalState.groupBy(col("user_id"))
-        .agg(max(col("last")).as("last"))
-        .select(col("user_id"), col("last.event_type").as("last_type"),
-          col("last.value").as("last_value"))
-      Relational.cdcMergeWithSnapshot(spark, dir, last)
-    } finally deleteRecursively(spool)
+    val finalState = replayToMemory(spark, "x61", events, "update")(
+      _.groupBy(col("user_id"))
+        .agg(max(struct(col("us"), col("event_id"), col("event_type"), col("value")))
+          .as("last")))
+    val last = finalState.groupBy(col("user_id"))
+      .agg(max(col("last")).as("last"))
+      .select(col("user_id"), col("last.event_type").as("last_type"),
+        col("last.value").as("last_value"))
+    Relational.cdcMergeWithSnapshot(spark, dir, last)
   }
 
   /** x73: STREAMING FUNNEL — q50's conversion analysis run continuously.
@@ -360,42 +374,14 @@ object StreamingQueries {
       .filter(col("event_id") % 8 === 0) // q50's sparse slice, shared
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("event_type"))
-    val spool = streamScratchDir("graft_stream_funnel")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_funnel_${runSeq.incrementAndGet()}"
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(events, feedDir, FeedFiles)
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
-        .as[graft.streaming.FunnelEvent]
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val sink =
-        try {
-          val q = graft.streaming.StreamingFunnel.steps(spark, stream)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          try {
-            q.processAllAvailable()
-            streamCrumb("x73", t0, tSpool, q)
-            spark.table(name).ckpt()
-          } finally q.stop()
-        } finally {
-          spark.catalog.dropTempView(name)
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      sink.groupBy(col("user_id"))
-        .agg(
-          min(when(col("stage") === "view", col("us"))).as("v_us"),
-          min(when(col("stage") === "click", col("us"))).as("c_us"),
-          min(when(col("stage") === "purchase", col("us"))).as("p_us"))
-        .orderBy("user_id")
-    } finally deleteRecursively(spool)
+    replayToMemory(spark, "x73", events, "append")(stream =>
+        graft.streaming.StreamingFunnel.steps(spark, stream.as[graft.streaming.FunnelEvent]))
+      .groupBy(col("user_id"))
+      .agg(
+        min(when(col("stage") === "view", col("us"))).as("v_us"),
+        min(when(col("stage") === "click", col("us"))).as("c_us"),
+        min(when(col("stage") === "purchase", col("us"))).as("p_us"))
+      .orderBy("user_id")
   }
 
   /** x57: streaming simhash near-dup dedup, end to end inside the batch
@@ -417,53 +403,25 @@ object StreamingQueries {
     val fps = graft.operators.Dedup.simhashRaw(docs)
       .select(col("doc_id"), col("simhash64"),
         col("band0"), col("band1"), col("band2"), col("band3"))
-    val spool = streamScratchDir("graft_stream_simdedup")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_simdedup_${runSeq.incrementAndGet()}"
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(fps, feedDir, FeedFiles, tsCol = "doc_id")
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(fps.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
+    replayToMemory(spark, "x57", fps, "append", tsCol = "doc_id") { stream =>
       val banded = stream.select(
         explode(array((0 until 4).map(b =>
           lit(b.toLong * 65536L) + col(s"band$b")): _*)).as("band"),
         col("doc_id"), col("simhash64")).as[graft.streaming.BandDoc]
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val sink =
-        try {
-          val q = graft.streaming.StreamingSimhashDedup.hits(banded)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          try {
-            q.processAllAvailable()
-            streamCrumb("x57", t0, tSpool, q)
-            spark.table(name).ckpt()
-          } finally q.stop()
-        } finally {
-          spark.catalog.dropTempView(name)
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      sink.groupBy(col("doc_id"))
-        .agg(min(struct(col("dup_of"), col("hamming"))).as("m"))
-        .select(col("doc_id"), col("m.dup_of").as("dup_of"),
-          col("m.hamming").cast("int").as("hamming"))
-        .orderBy("doc_id")
-    } finally deleteRecursively(spool)
+      graft.streaming.StreamingSimhashDedup.hits(banded)
+    }.groupBy(col("doc_id"))
+      .agg(min(struct(col("dup_of"), col("hamming"))).as("m"))
+      .select(col("doc_id"), col("m.dup_of").as("dup_of"),
+        col("m.hamming").cast("int").as("hamming"))
+      .orderBy("doc_id")
   }
 
-  /** The watermarked two-sided join itself, over any streaming frame with
-    * (user_id, us, event_id, event_type) — one definition shared by the
-    * driver-visible query and the checkpoint-restart recovery test, so the
-    * recovered operator IS the shipped operator.
-    */
-  /** The shared click→purchase interval-join plan. `salts = 1` (every
-    * ledger row) is the plain user_id equi-join. `salts = S > 1` is the
+  /** The watermarked two-sided click→purchase interval join itself, over
+    * any streaming frame with (user_id, us, event_id, event_type) — one
+    * definition shared by the driver-visible queries and the
+    * checkpoint-restart recovery test, so the recovered operator IS the
+    * shipped operator. `salts = 1` (every ledger row) is the plain
+    * user_id equi-join. `salts = S > 1` is the
     * OPT-IN hot-key guard for feeds where one key's rate × watermark
     * horizon exceeds one executor's state store (the residual exposure
     * StreamingHardeningSpec names): grid fragment-replicate salting —
@@ -537,39 +495,10 @@ object StreamingQueries {
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("event_type"))
-    val spool = streamScratchDir("graft_stream_join")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_join_${runSeq.incrementAndGet()}"
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(events, feedDir, FeedFiles)
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
-      val joined = intervalJoinStream(stream, windowSec)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val pairs =
-        try {
-          val q = joined
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          try {
-            q.processAllAvailable()
-            streamCrumb("x39", t0, tSpool, q)
-            spark.table(name).ckpt()
-          } finally q.stop()
-        } finally {
-          spark.catalog.dropTempView(name)
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      pairs.select(col("user_id"), col("click_id"), col("purchase_id"),
-          (col("p_us") - col("click_us")).as("delta_us"))
-        .orderBy("user_id", "click_id", "purchase_id")
-    } finally deleteRecursively(spool)
+    replayToMemory(spark, "x39", events, "append")(intervalJoinStream(_, windowSec))
+      .select(col("user_id"), col("click_id"), col("purchase_id"),
+        (col("p_us") - col("click_us")).as("delta_us"))
+      .orderBy("user_id", "click_id", "purchase_id")
   }
 
   /** x50: the LEFT OUTER stream-stream interval join — the semantics class
@@ -622,11 +551,10 @@ object StreamingQueries {
       .orderBy(col("user_id"), col("click_id").asc_nulls_first,
         col("purchase_id").asc_nulls_first)
 
-  /** Shared spool-replay-drain machinery for the outer interval joins
-    * (x50 left, x58 full): sentinel derivation, chronological replay,
-    * scoped shuffle partitions, breadcrumb, sink materialization. Returns
-    * the RAW sink rows — sentinel filtering and projection are the
-    * caller's (they differ per join type).
+  /** The outer interval joins' shared half (x50 left, x58 full): sentinel
+    * derivation and the [[replay]] into a memory sink. Returns the RAW
+    * sink rows — sentinel filtering and projection are the caller's (they
+    * differ per join type).
     */
   private def runOuterIntervalJoin(spark: SparkSession, dir: String, windowSec: Long,
                                    joinType: String, tag: String): DataFrame = {
@@ -648,35 +576,8 @@ object StreamingQueries {
         struct(lit(-2L).as("user_id"), col("us"), lit(-2L).as("event_id"),
           lit("purchase").as("event_type")))).as("s"))
       .select(col("s.user_id"), col("s.us"), col("s.event_id"), col("s.event_type"))
-    val spool = streamScratchDir("graft_stream_ojoin")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_ojoin_${runSeq.incrementAndGet()}"
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(events.unionByName(sentinels), feedDir, FeedFiles)
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
-      val joined = intervalJoinStream(stream, windowSec, joinType)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      try {
-        val q = joined
-          .writeStream.format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", spool.resolve("ckpt").toString)
-          .start()
-        try {
-          q.processAllAvailable()
-          streamCrumb(tag, t0, tSpool, q)
-          spark.table(name).ckpt()
-        } finally q.stop()
-      } finally {
-        spark.catalog.dropTempView(name)
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
-    } finally deleteRecursively(spool)
+    replayToMemory(spark, tag, events.unionByName(sentinels), "append")(
+      intervalJoinStream(_, windowSec, joinType))
   }
 
   /** Stream-static enrichment: the event stream joins a STATIC dimension
@@ -706,39 +607,16 @@ object StreamingQueries {
       .join(Tables.load(spark, dir, "nation"),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val spool = streamScratchDir("graft_stream_enrich")
-    val feedDir = spool.resolve("feed").toString
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(events, feedDir, FeedFiles)
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
-      val enriched = stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
+    replay(spark, "x40", events)(
+      (r, stream) => stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("n_name"), col("event_type"), col("cents"))
-      val outDir = spool.resolve("out").toString
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      try {
-        val q = enriched
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", spool.resolve("ckpt").toString)
-          .outputMode("append")
-          .start()
-        try {
-          q.processAllAvailable()
-          streamCrumb("x40", t0, tSpool, q)
-        } finally q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.read.parquet(outDir)
+        .writeStream.format("parquet").option("path", r.dir("out")).outputMode("append"))(
+      (r, _) => spark.read.parquet(r.dir("out"))
         .groupBy(col("n_name"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           (sum(col("cents")).cast("double") / 100).as("total_value"))
         .orderBy("n_name", "event_type")
-        .ckpt()
-    } finally deleteRecursively(spool)
+        .ckpt())
   }
 
   /** Exactly-once from at-least-once: every spool file is delivered TWICE
@@ -770,60 +648,53 @@ object StreamingQueries {
           "x45 requires globally unique event_id: %d rows, %d distinct",
           col("n"), col("d"))))
         .otherwise(lit(1L)).as("ok"))
-    val spool = streamScratchDir("graft_stream_xonce")
-    val feedDir = spool.resolve("feed").toString
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(
-        events.crossJoin(broadcast(guard)).filter(col("ok") === 1L).drop("ok"),
-        feedDir, FeedFiles)
-      // duplicate every part file, mtime-ordered right behind its original
-      val listing = Files.list(java.nio.file.Paths.get(feedDir))
-      val partFiles =
-        try listing.sorted().toArray.map(_.asInstanceOf[Path])
-          .filter(_.getFileName.toString.startsWith("part-"))
-        finally listing.close()
-      val base = System.currentTimeMillis() - 1000L * 1800
-      partFiles.zipWithIndex.foreach { case (p, i) =>
-        val dup = p.resolveSibling("redelivery-" + p.getFileName.toString)
-        Files.copy(p, dup)
-        require(p.toFile.setLastModified(base + 2L * i * 1000) &&
-          dup.toFile.setLastModified(base + (2L * i + 1) * 1000),
-          s"cannot stamp redelivery mtimes for $p")
-      }
-      val tSpool = System.nanoTime() // spool phase incl. the redelivery copies
-      val deduped = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
+    replay(spark, "x45", events.crossJoin(broadcast(guard)).filter(col("ok") === 1L).drop("ok"),
+        beforeStart = r => {
+          // duplicate every part file, mtime-ordered right behind its original
+          val base = System.currentTimeMillis() - 1000L * 1800
+          partFiles(r.feedDir).zipWithIndex.foreach { case (p, i) =>
+            val dup = p.resolveSibling("redelivery-" + p.getFileName.toString)
+            Files.copy(p, dup)
+            require(p.toFile.setLastModified(base + 2L * i * 1000) &&
+              dup.toFile.setLastModified(base + (2L * i + 1) * 1000),
+              s"cannot stamp redelivery mtimes for $p")
+          }
+        })(
+      (r, stream) => stream
         .withColumn("ts", timestamp_micros(col("us")))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .drop("ts")
-      val outDir = spool.resolve("out").toString
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      try {
-        val q = deduped
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", spool.resolve("ckpt").toString)
-          .outputMode("append")
-          .start()
-        try {
-          q.processAllAvailable()
-          streamCrumb("x45", t0, tSpool, q)
-        } finally q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.read.parquet(outDir)
+        .writeStream.format("parquet").option("path", r.dir("out")).outputMode("append"))(
+      (r, _) => spark.read.parquet(r.dir("out"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           (sum(col("cents")).cast("double") / 100).as("total_value"),
           expr("bit_xor(event_id)").as("event_xor"))
         .orderBy("user_id")
-        .ckpt()
-    } finally deleteRecursively(spool)
+        .ckpt())
   }
 
+  /** x26: runs the streaming gap sessionizer ([[StreamingGapSessionize]])
+    * end to end inside the batch driver contract and reshapes its closed
+    * sessions to q8's exact schema, so the SAME DuckDB oracle that checks
+    * the batch operator hash-checks the streaming twin — the
+    * stream-equals-batch guarantee moves from a ScalaTest assertion into
+    * the driver's hard signal.
+    *
+    * The feed is stream-native: the event table is written to a spool
+    * directory as time-ranged parquet files and the sessionizer reads them
+    * through a FILE STREAM source (one micro-batch per file — the same
+    * shape as a production directory-watching ingest).
+    * Nothing is ever materialized on the driver: the spool write is a
+    * distributed job, and each micro-batch flows scan → state store → sink
+    * entirely on executors. `repartitionByRange` over event time makes file
+    * k chronologically precede file k+1 (equal timestamps land in one file),
+    * so per-user event order across micro-batches is non-decreasing and the
+    * stream reproduces the batch sessionization bit for bit; disorder
+    * WITHIN a micro-batch is handled by the operator (and exercised, with
+    * genuine cross-batch disorder, in StreamingSpec).
+    */
   def gapSessions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val events = Tables.load(spark, dir, "events")
@@ -849,70 +720,26 @@ object StreamingQueries {
           col("mnu")))).otherwise(lit(-1L)).as("user_id"),
         (col("mx") + 1000L * 3600 * 1000000).as("us"),
         lit(0L).as("cents"))
-    val spool = streamScratchDir("graft_stream_spool")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_gap_${runSeq.incrementAndGet()}"
-    try {
-      // Spool the stream input as FeedFiles time-ranged parquet files with
-      // ascending mtimes (file boundaries ARE time boundaries, and the
-      // file source replays oldest-mtime-first), so per-user event order
-      // across micro-batches is non-decreasing — required for the
-      // bit-for-bit batch equivalence of a gap sessionizer.
-      val t0 = System.nanoTime()
-      spoolChronological(events, feedDir, FeedFiles)
-      val tSpool = System.nanoTime()
-
-      implicit val enc: Encoder[GapEvent] = Encoders.product[GapEvent]
-      val stream = spark.readStream
-        .schema(enc.schema)
-        .option("maxFilesPerTrigger", "1") // one micro-batch per range file
-        .parquet(feedDir)
-        .as[GapEvent]
-      // The streaming stage runs EAGERLY here (processAllAvailable below),
-      // so scoping the shuffle-partition count to it is safe — the returned
-      // DataFrame only reads the materialized sink. Fewer partitions =
-      // fewer state-store instances to open/commit per micro-batch;
-      // per-batch fixed cost dominates this operator locally (state per
-      // key is O(1) either way, and a real deployment sizes this to its
-      // key cardinality).
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val sessions =
-        try {
-          val q = StreamingGapSessionize.sessions(spark, stream, 1800L * 1000000L)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          try {
-            q.processAllAvailable() // all FeedFiles batches, chronologically
-            // far-future sentinel (user -1) as one more spooled file: its
-            // event time pushes the watermark past every open session's
-            // timeout, flushing idle sessions — written AFTER the first
-            // drain so it is guaranteed to arrive as its own micro-batch
-            sentinel.coalesce(1).write.mode("append").parquet(feedDir)
-            q.processAllAvailable()
-            streamCrumb("x26", t0, tSpool, q)
-            // materialize off the memory sink, then drop its temp view —
-            // repeated bench/verify invocations must not pin one full
-            // result copy per run in driver memory for the session lifetime
-            spark.table(name).ckpt()
-          } finally q.stop()
-        } finally {
-          spark.catalog.dropTempView(name)
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("start_us"))
-      sessions.filter(col("user_id") >= 0)
-        .withColumn("session_id", row_number().over(w).cast("bigint"))
-        .select(col("user_id"), col("session_id"),
-          col("n_events"), col("start_us"),
-          (col("end_us") - col("start_us")).as("duration_us"),
-          // integer cents -> double via one correctly-rounded division:
-          // equals the batch decimal-sum-cast-double cents-exactly
-          (col("total_cents").cast("double") / 100).as("total_value"))
-        .orderBy("user_id", "session_id")
-    } finally deleteRecursively(spool)
+    val sessions = replayToMemory(spark, "x26", events, "append",
+      afterDrain = (r, q) => {
+        // far-future sentinel (user -1) as one more spooled file: its
+        // event time pushes the watermark past every open session's
+        // timeout, flushing idle sessions — written AFTER the first
+        // drain so it is guaranteed to arrive as its own micro-batch
+        sentinel.coalesce(1).write.mode("append").parquet(r.feedDir)
+        q.processAllAvailable()
+      })(stream => StreamingGapSessionize.sessions(spark, stream.as[GapEvent], 1800L * 1000000L))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("user_id")).orderBy(col("start_us"))
+    sessions.filter(col("user_id") >= 0)
+      .withColumn("session_id", row_number().over(w).cast("bigint"))
+      .select(col("user_id"), col("session_id"),
+        col("n_events"), col("start_us"),
+        (col("end_us") - col("start_us")).as("duration_us"),
+        // integer cents -> double via one correctly-rounded division:
+        // equals the batch decimal-sum-cast-double cents-exactly
+        (col("total_cents").cast("double") / 100).as("total_value"))
+      .orderBy("user_id", "session_id")
   }
 
   /** x47: the FLAGSHIP taxi-FSM sessionizer run as a stream — the segments
@@ -954,37 +781,10 @@ object StreamingQueries {
           "yyyy-MM-dd HH:mm:ss").as("tsS"),
         lit("37.70000").as("latS"), lit("-122.40000").as("longS"), lit("E").as("status"))
 
-    val spool = streamScratchDir("graft_stream_taxi")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_taxi_${runSeq.incrementAndGet()}"
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(positions.unionByName(sentinels), feedDir, FeedFiles, "ts")
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(positions.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
-        .as[graft.operators.TaxiPosition]
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val trips =
-        try {
-          val q = graft.streaming.StreamingSessionize.trips(spark, stream)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          try {
-            q.processAllAvailable()
-            streamCrumb("x47", t0, tSpool, q)
-            spark.table(name).as[graft.operators.TaxiTrip].ckpt()
-          } finally q.stop()
-        } finally {
-          spark.catalog.dropTempView(name)
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      TaxiQueries.dailyRevenue(trips)
-    } finally deleteRecursively(spool)
+    val trips = replayToMemory(spark, "x47", positions.unionByName(sentinels), "append",
+      tsCol = "ts")(stream =>
+      graft.streaming.StreamingSessionize.trips(spark, stream.as[graft.operators.TaxiPosition]))
+    TaxiQueries.dailyRevenue(trips.as[graft.operators.TaxiTrip])
   }
 
   /** x63: streaming SLIDING-window trending — top-3 event types per
@@ -1046,36 +846,8 @@ object StreamingQueries {
           raise_error(lit("x63 sentinel event_type collides with a real event_type")))
         .otherwise(col("mx") + lit(2L * 3600 * 1000000)).as("us"),
         lit(TrendingSentinelType).as("event_type"))
-    val spool = streamScratchDir("graft_stream_trend")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_trend_${runSeq.incrementAndGet()}"
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(events.unionByName(sentinels), feedDir, FeedFiles)
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val finalized =
-        try {
-          val q = trendingCounts(stream)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          try {
-            q.processAllAvailable()
-            streamCrumb("x63", t0, tSpool, q)
-            spark.table(name).ckpt()
-          } finally q.stop()
-        } finally {
-          spark.catalog.dropTempView(name)
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      trendingTopK(finalized)
-    } finally deleteRecursively(spool)
+    trendingTopK(replayToMemory(spark, "x63", events.unionByName(sentinels), "append")(
+      trendingCounts))
   }
 
   /** x106: STREAMING embedding-drift monitor — x98's frozen-centroid ops
@@ -1105,50 +877,22 @@ object StreamingQueries {
     val feed = emb
       .filter(graft.operators.IncrementalAnn.isNewVec(col("vec_id")))
       .select(col("vec_id"), col("embedding"))
-    val spool = streamScratchDir("graft_stream_drift")
-    val feedDir = spool.resolve("feed").toString
-    val name = s"graft_stream_drift_${runSeq.incrementAndGet()}"
-    try {
-      val t0 = System.nanoTime()
-      spoolChronological(feed, feedDir, FeedFiles, tsCol = "vec_id")
-      val tSpool = System.nanoTime()
-      val stream = spark.readStream
-        .schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val batchCounts =
-        try {
-          val assigned = stream
-            .select(expr("transform(cast(embedding as array<double>), " +
-              s"x -> cast(floor(x * cast(${graft.operators.KMeans.FixedPointScale} as double)) as double))").as("fv"))
-            .filter(size(col("fv")) === domSz) // ragged vectors drop, as in batch
-            .select(graft.operators.KMeans.assignCellExpr(col("fv"), cents).as("cell"))
-          val q = assigned.groupBy(col("cell")).agg(count(lit(1)).as("n_batch"))
-            .writeStream.format("memory").queryName(name).outputMode("complete")
-            .option("checkpointLocation", spool.resolve("ckpt").toString)
-            .start()
-          try {
-            q.processAllAvailable()
-            streamCrumb("x106", t0, tSpool, q)
-            spark.table(name).ckpt()
-          } finally q.stop()
-        } finally {
-          spark.catalog.dropTempView(name)
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      val counts = baseline.join(batchCounts, Seq("cell"), "full_outer")
-        .na.fill(0L, Seq("n_corpus", "n_batch"))
-        .ckpt() // ≤ k rows; read for the totals AND the share projection
-      val totals = counts.agg(sum(col("n_corpus")).as("t_corpus"),
-        sum(col("n_batch")).as("t_batch"))
-      counts.crossJoin(broadcast(totals))
-        .select(col("cell"), col("n_corpus"), col("n_batch"),
-          (col("n_corpus").cast("double") / col("t_corpus")).as("share_corpus"),
-          (col("n_batch").cast("double") / col("t_batch")).as("share_batch"))
-        .orderBy("cell")
-    } finally deleteRecursively(spool)
+    val batchCounts = replayToMemory(spark, "x106", feed, "complete", tsCol = "vec_id")(
+      _.select(expr("transform(cast(embedding as array<double>), " +
+          s"x -> cast(floor(x * cast(${graft.operators.KMeans.FixedPointScale} as double)) as double))").as("fv"))
+        .filter(size(col("fv")) === domSz) // ragged vectors drop, as in batch
+        .select(graft.operators.KMeans.assignCellExpr(col("fv"), cents).as("cell"))
+        .groupBy(col("cell")).agg(count(lit(1)).as("n_batch")))
+    val counts = baseline.join(batchCounts, Seq("cell"), "full_outer")
+      .na.fill(0L, Seq("n_corpus", "n_batch"))
+      .ckpt() // ≤ k rows; read for the totals AND the share projection
+    val totals = counts.agg(sum(col("n_corpus")).as("t_corpus"),
+      sum(col("n_batch")).as("t_batch"))
+    counts.crossJoin(broadcast(totals))
+      .select(col("cell"), col("n_corpus"), col("n_batch"),
+        (col("n_corpus").cast("double") / col("t_corpus")).as("share_corpus"),
+        (col("n_batch").cast("double") / col("t_batch")).as("share_batch"))
+      .orderBy("cell")
   }
 
   /** x118: STREAMING ingest for the incremental production index — the
@@ -1175,69 +919,52 @@ object StreamingQueries {
     val feed = Tables.load(spark, dir, "embeddings")
       .filter(graft.operators.IncrementalPq.isBatchVec(col("vec_id")))
       .select(col("vec_id"), col("embedding"))
-    val spool = streamScratchDir("graft_stream_incpq")
-    try {
-      val codes = streamEncodedCodes(spark, spool, feed, coarse, cb, domSz)
-      graft.operators.IncrementalPq.searchWithBatchCodes(spark, dir, codes)
-    } finally deleteRecursively(spool)
+    graft.operators.IncrementalPq.searchWithBatchCodes(spark, dir,
+      streamEncodedCodes(spark, None, feed, coarse, cb, domSz))
   }
 
   /** The stream-encode stage of [[streamingIncrementalPq]], returning
     * the materialized (c_id, ccell, sub, cell) codes — split out so the
     * stream ≡ batch spec can pin the encode itself, not only the
-    * search it feeds.
+    * search it feeds. A given `spool` is the caller's to delete; `None`
+    * runs in runner-allocated scratch.
     */
-  private[graft] def streamEncodedCodes(spark: SparkSession, spool: Path,
+  private[graft] def streamEncodedCodes(spark: SparkSession, spool: Option[Path],
                                         feed: DataFrame, coarse: DataFrame,
                                         cb: DataFrame, domSz: Int,
                                         durableOut: Option[String] = None): DataFrame = {
-    val feedDir = spool.resolve("feed").toString
     // `durableOut` is the ingest-DAEMON posture: the per-batch delta dirs
     // outlive the run (caller-owned directory) instead of dying with the
     // spool, so a later store boundary can re-bucket them WITHOUT
     // re-running the encode. Same idempotent overwrite-by-batch-id
     // contract either way.
-    val outDir = durableOut.getOrElse(spool.resolve("codes").toString)
-    val t0 = System.nanoTime()
-    spoolChronological(feed, feedDir, FeedFiles, tsCol = "vec_id")
-    val tSpool = System.nanoTime()
-    val stream = spark.readStream
-      .schema(feed.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feedDir)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try {
-      val q = stream.writeStream
+    def outDir(r: Replay) = durableOut.getOrElse(r.dir("codes"))
+    replay(spark, "x118", feed, tsCol = "vec_id", spool = spool)(
+      (r, stream) => stream.writeStream
         .foreachBatch { (mb: DataFrame, batchId: Long) =>
           graft.operators.IncrementalPq.encodeSlice(mb, coarse, cb, domSz)
-            .write.mode("overwrite").parquet(s"$outDir/b=$batchId")
-        }
-        .option("checkpointLocation", spool.resolve("ckpt").toString)
-        .start()
-      try {
-        q.processAllAvailable()
-        streamCrumb("x118", t0, tSpool, q)
-        // Empty-feed guard (r19 ADVICE): zero micro-batches mean no
-        // b=<id> dir ever lands and the bare read throws "unable to
-        // infer schema" — degrade to an empty codes relation instead,
-        // with the schema derived from the SAME encode chain over a
-        // zero-row feed, so the shape cannot drift from the real path.
-        val anyBatch = Files.isDirectory(Paths.get(outDir)) && {
-          val s = Files.list(Paths.get(outDir))
-          try s.anyMatch(p => p.getFileName.toString.startsWith("b="))
-          finally s.close()
-        }
-        // durable deltas need no ckpt — the files themselves survive the
-        // spool teardown; the scratch path must ckpt before the finally
-        // deletes what the plan would lazily re-read
-        if (anyBatch) {
-          val codes = spark.read.parquet(outDir).drop("b")
-          if (durableOut.isDefined) codes else codes.ckpt()
-        } else graft.operators.IncrementalPq.encodeSlice(
-          feed.limit(0), coarse, cb, domSz).ckpt()
-      } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+            .write.mode("overwrite").parquet(s"${outDir(r)}/b=$batchId")
+        }) { (r, _) =>
+      // Empty-feed guard (r19 ADVICE): zero micro-batches mean no
+      // b=<id> dir ever lands and the bare read throws "unable to
+      // infer schema" — degrade to an empty codes relation instead,
+      // with the schema derived from the SAME encode chain over a
+      // zero-row feed, so the shape cannot drift from the real path.
+      val out = Paths.get(outDir(r))
+      val anyBatch = Files.isDirectory(out) && {
+        val s = Files.list(out)
+        try s.anyMatch(p => p.getFileName.toString.startsWith("b="))
+        finally s.close()
+      }
+      // durable deltas need no ckpt — the files themselves survive the
+      // spool teardown; the scratch path must ckpt before the finally
+      // deletes what the plan would lazily re-read
+      if (anyBatch) {
+        val codes = spark.read.parquet(out.toString).drop("b")
+        if (durableOut.isDefined) codes else codes.ckpt()
+      } else graft.operators.IncrementalPq.encodeSlice(
+        feed.limit(0), coarse, cb, domSz).ckpt()
+    }
   }
 
   /** x120's ingest half: day `day`'s code delta for the incremental
@@ -1265,9 +992,7 @@ object StreamingQueries {
       val feed = Tables.load(spark, dir, "embeddings")
         .filter(graft.operators.IncrementalPq.isDayVec(day)(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
-      val spool = streamScratchDir("graft_stream_daypq")
-      try streamEncodedCodes(spark, spool, feed, coarse, cb, domSz)
-      finally deleteRecursively(spool)
+      streamEncodedCodes(spark, None, feed, coarse, cb, domSz)
     }
 
   /** The long-running half of the ingest-DAEMON shape (the r19 advice
@@ -1293,9 +1018,7 @@ object StreamingQueries {
       .filter(graft.operators.IncrementalPq.isDayVec(day)(col("vec_id")))
       .select(col("vec_id"), col("embedding"))
     val out = Paths.get(deltaRoot, s"day=$day")
-    val spool = streamScratchDir("graft_stream_daemon")
-    try streamEncodedCodes(spark, spool, feed, coarse, cb, domSz, Some(out.toString))
-    finally deleteRecursively(spool)
+    streamEncodedCodes(spark, None, feed, coarse, cb, domSz, Some(out.toString))
     out.toString
   }
 

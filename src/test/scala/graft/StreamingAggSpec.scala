@@ -228,7 +228,7 @@ class StreamingAggSpec extends AnyFunSuite {
     val spool = java.nio.file.Files.createTempDirectory("graft_stream_incpq_spec")
     val streamed =
       try canon(graft.queries.StreamingQueries
-        .streamEncodedCodes(spark, spool, feed, coarse, cb, domSz))
+        .streamEncodedCodes(spark, Some(spool), feed, coarse, cb, domSz))
       finally graft.sources.LayoutCache.deleteTree(spool)
     val batchCodes = canon(IncrementalPq.encodeSlice(feed, coarse, cb, domSz))
     assert(streamed.nonEmpty)
@@ -255,7 +255,7 @@ class StreamingAggSpec extends AnyFunSuite {
     val spool = java.nio.file.Files.createTempDirectory("graft_stream_incpq_empty")
     val out =
       try graft.queries.StreamingQueries
-        .streamEncodedCodes(spark, spool, feed, coarse, cb, domSz)
+        .streamEncodedCodes(spark, Some(spool), feed, coarse, cb, domSz)
       finally graft.sources.LayoutCache.deleteTree(spool)
     assert(out.columns.toSeq == Seq("c_id", "ccell", "sub", "cell"))
     assert(out.count() == 0)

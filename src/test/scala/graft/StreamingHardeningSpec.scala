@@ -16,7 +16,10 @@ import java.nio.file.{Files, Path}
   *    state and matches in one partition) stays WATERMARK-BOUNDED: state
   *    is O(hot-key rate × horizon), not O(stream), and the emitted pairs
   *    still equal the batch twin. The measured numbers are recorded in
-  *    BASELINE.md (the BucketBoundSpec treatment, applied to join state).
+  *    BASELINE.md (the BucketBoundSpec treatment, applied to join state);
+  *  - the spool-replay runner every streaming row shares leaves no trace
+  *    (live query, sink view, shuffle width, scratch) on success or
+  *    failure, and x45's redelivery path equals its batch aggregate.
   */
 class StreamingHardeningSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
@@ -79,6 +82,109 @@ class StreamingHardeningSpec extends AnyFunSuite {
       assert(messageChain(e).contains("globally unique event_id"),
         s"expected the x45 guard to fire; got: ${messageChain(e)}")
     } finally graft.sources.LayoutCache.deleteTree(root)
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Run `call` with a fresh scratch root and a shuffle width distinct
+    * from the runner's, then assert the runner left nothing behind: no
+    * active query, no `graft_stream_*` temp view, the caller's shuffle
+    * width back in place, an empty scratch root. Returns `call`'s result
+    * (or the failure it threw).
+    */
+  private def assertNoTrace[T](call: => T): Either[Throwable, T] = {
+    val scratch = Files.createTempDirectory("graft_runner_scratch")
+    val prevScratch = sys.props.get("graft.stream.scratch")
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    System.setProperty("graft.stream.scratch", scratch.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try {
+      val out = try Right(call) catch { case e: Exception => Left(e) }
+      assert(spark.streams.active.isEmpty, "a streaming query outlived the runner")
+      val views = spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("graft_stream_"))
+      assert(views.isEmpty, s"memory-sink views left behind: ${views.mkString(", ")}")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "7",
+        "the runner did not restore the caller's shuffle width")
+      val left = Files.list(scratch)
+      try assert(left.count() == 0, s"scratch left under $scratch") finally left.close()
+      out
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      prevScratch match {
+        case Some(v) => System.setProperty("graft.stream.scratch", v)
+        case None => System.clearProperty("graft.stream.scratch")
+      }
+      graft.sources.LayoutCache.deleteTree(scratch)
+    }
+  }
+
+  test("spool-replay runner leaves no trace; its result still collects after teardown") {
+    val Q = graft.queries.StreamingQueries
+    for ((row, call) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "x36 memory sink" -> (() => Q.firstTouch(spark, sf)),
+        "x40 file sink" -> (() => Q.enrichedByNation(spark, sf)),
+        "x118 foreachBatch" -> (() => Q.streamingIncrementalPq(spark, sf)))) {
+      val df = assertNoTrace(call()).fold(e => fail(s"$row failed", e), identity)
+      assert(df.collect().nonEmpty, s"$row: result empty or unreadable after teardown")
+    }
+  }
+
+  test("spool-replay runner leaves no trace when a row fails before or after the stream starts") {
+    // x45's guard fires in the spool write, before the stream exists;
+    // x26's fires in the post-drain sentinel write, with the query
+    // running and its memory sink registered
+    val root = Files.createTempDirectory("graft_runner_fail")
+    try {
+      val base = 1700000000L * 1000000000L
+      val dupIds = writeEvents(Files.createDirectory(root.resolve("dup")), Seq(
+        (9L, base, 1L, "click", 1.0),
+        (9L, base + 60L * 1000000000L, 2L, "purchase", 2.0)))
+      val negUser = writeEvents(Files.createDirectory(root.resolve("neg")), Seq(
+        (1L, base, -5L, "click", 1.0),
+        (2L, base + 60L * 1000000000L, 3L, "view", 2.0)))
+      for ((row, call, guard) <- Seq(
+          ("x45", () => graft.queries.StreamingQueries.exactlyOnce(spark, dupIds),
+            "globally unique event_id"),
+          ("x26", () => graft.queries.StreamingQueries.gapSessions(spark, negUser),
+            "x26 sentinel convention"))) {
+        val e = assertNoTrace(call()).swap.getOrElse(fail(s"$row: expected its guard to fire"))
+        assert(messageChain(e).contains(guard), s"$row: unexpected failure: ${messageChain(e)}")
+      }
+    } finally graft.sources.LayoutCache.deleteTree(root)
+  }
+
+  test("x45 exactly-once over redelivered files equals the batch per-user aggregate of the original events") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+    val batch = Tables.load(spark, sf, "events")
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        (sum((col("value").cast("decimal(18,2)") * 100).cast("long")).cast("double") / 100)
+          .as("total_value"),
+        expr("bit_xor(event_id)").as("event_xor"))
+      .orderBy("user_id")
+    val want = rows(batch)
+    assert(want.nonEmpty)
+    // the redelivery hook must actually double the feed the stream reads
+    val inputRows = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        inputRows.addAndGet(e.progress.numInputRows)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      assert(rows(graft.queries.StreamingQueries.exactlyOnce(spark, sf)) === want)
+      val nEvents = want.map(_._2).sum
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (inputRows.get < 2 * nEvents && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(inputRows.get == 2 * nEvents,
+        s"stream read ${inputRows.get} rows; redelivery of $nEvents events should give ${2 * nEvents}")
+    } finally spark.streams.removeListener(listener)
   }
 
   /** The adversarial feed: one user owns ~99.6% of the stream — 6 hours
