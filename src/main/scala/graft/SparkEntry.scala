@@ -593,8 +593,8 @@ object SparkEntry {
     // neighbor graph derived deterministically from the corpus) at
     // top-10, with the per-hit cluster-identity flag — pins that the
     // index finds structure where structure exists, not just that the
-    // arithmetic replays; RecallStudy measures recall@10 vs exact on the
-    // same fixture at 1x/3x/10x
+    // arithmetic replays; recall@10 vs exact on the same fixture at
+    // 1x/3x/10x is in BASELINE.md, Round 16 pqrecall
     "x113_pq_clustered_topk" -> ((s, d) => {
       val fix = graft.operators.ProductQuantization.clusteredFixture(
         Tables.load(s, d, "embeddings"))

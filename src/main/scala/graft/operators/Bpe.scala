@@ -215,8 +215,8 @@ object Bpe {
   /** The driver-side merge loop of [[trainFast]]: exact incremental
     * pair counts + lazy-deletion heap over a bounded dictionary.
     */
-  private[graft] def trainInMemory(types: Array[(String, Long)],
-                                   numMerges: Int): Seq[Merge] = {
+  private def trainInMemory(types: Array[(String, Long)],
+                            numMerges: Int): Seq[Merge] = {
     import scala.collection.mutable
     type Pair = (String, String)
     // Word types as mutable symbol sequences; duplicates (possible after

@@ -55,14 +55,12 @@ object Classifier {
     * AFTER the update, in feature order (chars, tokens, punct, digits,
     * stopwords, bias).
     */
-  final case class Round(iter: Int, nUpdates: Long, w: Array[Long])
+  private final case class Round(iter: Int, nUpdates: Long, w: Array[Long])
 
   /** Integer feature relation: (doc_id, source, f_c, f_t, f_p, f_d,
     * f_s, y) — x10's count definitions plus the weak label.
-    * `private[graft]` so the scale study can time training and scoring
-    * separately over one materialized relation.
     */
-  private[graft] def features(docs: DataFrame): DataFrame = {
+  private def features(docs: DataFrame): DataFrame = {
     val toks = TextAnalysis.tokens(col("text"))
     docs.select(col("doc_id"), col("source"),
         length(col("text")).cast("long").as("f_c"),
@@ -83,7 +81,7 @@ object Classifier {
   /** `iters` batch-perceptron rounds over the ckpt'd feature relation;
     * one 7-value aggregate per round.
     */
-  private[graft] def trainRounds(f: DataFrame, iters: Int): Seq[Round] = {
+  private def trainRounds(f: DataFrame, iters: Int): Seq[Round] = {
     var w = Array.fill(6)(0L)
     val rounds = Seq.newBuilder[Round]
     for (i <- 1 to iters) {
@@ -123,10 +121,9 @@ object Classifier {
   }
 
   /** The scoring pass alone, given trained weights — one stateless
-    * projection + one per-source aggregate (what the scale study times
-    * as "gate", separate from training).
+    * projection + one per-source aggregate.
     */
-  private[graft] def confusionGiven(f: DataFrame, w: Array[Long]): DataFrame =
+  private def confusionGiven(f: DataFrame, w: Array[Long]): DataFrame =
     f.withColumn("pred", when(score(w) >= 0, 1L).otherwise(-1L))
       .groupBy(col("source"))
       .agg(

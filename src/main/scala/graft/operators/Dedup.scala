@@ -146,8 +146,9 @@ object Dedup {
     * On top of the prefix, the production path applies PPJoin's
     * POSITIONAL filter (see [[containmentCandidates]]): matched prefix
     * grams whose remaining-overlap bound cannot reach ⌈t·sz⌉ are pruned
-    * before the distinct — still exactly lossless, and ScaleStudy's
-    * `containment` section measures the candidate reduction at 1×/3×/10×.
+    * before the distinct — still exactly lossless; the candidate
+    * reduction at 1×/3×/10× is recorded in BASELINE.md, "Round-14: the
+    * carried directive list executed", x85 positional filter (PPJoin).
     */
   def containmentJoin(docs: DataFrame, threshold: Double = 0.8,
                       minShingles: Int = 10): DataFrame = {
@@ -195,8 +196,8 @@ object Dedup {
     // relation costs one int compare per row.
     .filter(col("sz") >= minShingles)
 
-  /** x85's candidate generation over a [[shingledDocs]] relation, split
-    * out so ScaleStudy can A/B the two pruning levels:
+  /** x85's candidate generation over a [[shingledDocs]] relation, at
+    * one of two pruning levels:
     *
     *  - `positional = false`: prefix filter only — each doc's
     *    (⌊(1-t)·sz⌋+1) globally-rarest grams probe the full inverted
@@ -388,7 +389,8 @@ object Dedup {
   }
 
   /** The candidate stage alone (no exact verification) — the quantity the
-    * Σ bucket² bound governs; [[graft.ScaleStudy]] measures its growth.
+    * Σ bucket² bound governs; its growth is recorded in BASELINE.md, "LSH
+    * scale table refreshed for star edges (round 5)".
     */
   def minhashLshCandidates(docs: DataFrame, numPerms: Int = 32, rowsPerBand: Int = 4,
                            maxBucket: Int = 64): DataFrame = {

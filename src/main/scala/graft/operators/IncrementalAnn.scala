@@ -47,8 +47,8 @@ object IncrementalAnn {
   // restriction-equality contract (and the x49 replayed-SQL oracle, which
   // pins them). Both are overridable: fixed nBits means per-bucket
   // occupancy grows linearly with the corpus, so a production deployment
-  // re-sizes nBits ~ log2(corpus) ([[Similarity.occupancySizedBits]]) —
-  // the occupancy-constant scale study drives these overrides.
+  // re-sizes nBits ~ log2(corpus) ([[Similarity.occupancySizedBits]],
+  // pinned by `AnnSizingSpec`) through these overrides.
   private[graft] val NBits = 6
   private[graft] val NTables = 8
   private val StoreBuckets = 8
@@ -88,8 +88,8 @@ object IncrementalAnn {
 
   /** The candidate half of [[incrementalTopK]]: (probe_id, cand_id)
     * shared-bucket collisions of the new batch against the persisted
-    * corpus index — exposed so the occupancy-constant scale study can
-    * count candidates/probe without ranking them.
+    * corpus index — exposed so `AnnSizingSpec` can count
+    * candidates/probe without ranking them.
     *
     * `multiProbe` applies [[Similarity.multiProbeTopK]]'s Hamming-1
     * bucket expansion to the BATCH side only — a query-time policy over

@@ -60,7 +60,7 @@ object IncrementalDedup {
   private def bsig: Column = xxhash64(col("band"), col("sig"))
 
   /** Idempotently persist the corpus band store; returns the table name. */
-  def bandStore(spark: SparkSession, dir: String): String =
+  private def bandStore(spark: SparkSession, dir: String): String =
     Bucketed.materializedBucketedTable(spark, "bandstore_" + DirTag.dirScope(dir) + "_",
       "bandstore_" + DirTag(dir, "documents"), "bsig", StoreBuckets) {
       graft.functions.ArrayExpressions.register(spark)
@@ -71,7 +71,7 @@ object IncrementalDedup {
     }
 
   /** Idempotently persist the corpus fingerprint store (verification side). */
-  def fingerprintStore(spark: SparkSession, dir: String): String =
+  private def fingerprintStore(spark: SparkSession, dir: String): String =
     Bucketed.materializedBucketedTable(spark, "fpstore_" + DirTag.dirScope(dir) + "_",
       "fpstore_" + DirTag(dir, "documents"), "doc_id", StoreBuckets) {
       graft.functions.ArrayExpressions.register(spark)

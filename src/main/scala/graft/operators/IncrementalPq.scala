@@ -362,7 +362,8 @@ object IncrementalPq {
     * the persisted day-0 [[vectorsStore]] plus the in-flight batch's
     * own vectors — so daily ingest gets BOTH: no corpus re-read,
     * re-residualization or retraining per cycle, AND the re-ranked
-    * recall (measured ≡ the probe ceiling, ScaleStudy incpqrecall).
+    * recall (measured ≡ the probe ceiling, BASELINE.md, Round 19: x116
+    * incremental IVFADC-R recall).
     * Per-cycle cost adds one |queries|·shortlist-row join against the
     * ccell-bucketed vectors store. (q_id, rnk, c_id, d2).
     */
@@ -403,8 +404,7 @@ object IncrementalPq {
   /** The coarse geometry the sized entry points use for `dir`'s stores —
     * √(day-0 training slice), read from the persisted geometry catalog
     * ([[sizedGeometryStore]]); the corpus-scaled count runs only on the
-    * catalog's cold build. Exposed so [[graft.ScaleStudy]] can name (and
-    * afterwards retire) the exact store tags the sized search builds.
+    * catalog's cold build.
     */
   private[graft] def sizedGeometry(spark: SparkSession, dir: String): Int =
     spark.table(sizedGeometryStore(spark, dir))
@@ -416,8 +416,7 @@ object IncrementalPq {
     * so it lives in the same [[Bucketed.materializedBucketedTable]]
     * family as the stores themselves: cross-JVM cached, stale stamps
     * swept, a regenerated fixture re-derives it. The builder is the ONE
-    * place the O(corpus) sizing count is paid; returns the table name
-    * (exposed so [[graft.ScaleStudy]] retires it with the stores).
+    * place the O(corpus) sizing count is paid; returns the table name.
     */
   private[graft] def sizedGeometryStore(spark: SparkSession, dir: String): String =
     Bucketed.materializedBucketedTable(spark, "pqsz_" + DirTag.dirScope(dir) + "_",

@@ -52,7 +52,7 @@ object ProductQuantization {
     * the production PQ sizing (Jégou et al. 2011 use k* = 256 throughout;
     * it is also what FAISS ships as the default). A 64-dim vector
     * compresses to NumSub = 8 bytes. Earlier cuts measured the resolution
-    * ladder on the clustered fixture (RecallStudy/ScaleStudy pqrecall):
+    * ladder on the clustered fixture (BASELINE.md, Round 16 pqrecall):
     * 4 subspaces x 2-bit codes ranked near-randomly, K=16 (4-bit) reached
     * recall@10 0.66-0.68 against a 0.98-1.00 coarse-probe ceiling — the
     * gap was PQ resolution, not routing. K=256 is the same plan with a
@@ -169,7 +169,7 @@ object ProductQuantization {
   }
 
   /** Brute-force EXACT fixed-point L2 top-k over the same hold-out split
-    * as [[adcTopK]] — the recall baseline ([[graft.RecallStudy]]). Not a
+    * as [[adcTopK]] — the recall baseline (`AnnSizingSpec`). Not a
     * ledger row and not a production path: the all-pairs scan is
     * precisely what PQ exists to avoid; it lives here so the baseline
     * and the compressed search can never drift apart on split or
@@ -206,8 +206,8 @@ object ProductQuantization {
     * CoarseK = √n it is NProbe·√n, and the per-query routing cost
     * (distance to every coarse centroid) is also √n — the classic IVF
     * balance point where neither side dominates as n grows (FAISS's own
-    * guideline). The ScaleStudy pqrecall table measured the trade on the
-    * clustered fixture: CoarseK=32@NProbe=2 matched CoarseK=8's recall on
+    * guideline). The pqrecall table (BASELINE.md, Round 16) measured
+    * the trade on the clustered fixture: CoarseK=32@NProbe=2 matched CoarseK=8's recall on
     * ~40% fewer candidates at 10×. Floored at the fixed ledger constant
     * so tiny corpora keep non-degenerate lists; the hash-gated ledger
     * rows (x108/x113) keep the FIXED geometry — their oracles interpolate
@@ -236,8 +236,9 @@ object ProductQuantization {
 
   /** Probes for the SIZED coarse geometry. With √n lists each list holds
     * ~√n vectors and a planted neighborhood spans a couple of them, so
-    * NProbe = 2 leaves routing recall on the table; the ScaleStudy
-    * pqrecall grid measured the ceiling at (√n lists, nProbe) on the
+    * NProbe = 2 leaves routing recall on the table; the pqrecall grid
+    * (BASELINE.md, Round 18: IVFADC-R composed production default)
+    * measured the ceiling at (√n lists, nProbe) on the
     * clustered fixture at 1×/3×/10×: np=2 → 0.972/0.975/0.951,
     * np=4 → 1.000/0.999/0.992 at candidate counts still growing ~√n
     * (212/321/741 cand/q). 4 is the knee.
@@ -266,11 +267,10 @@ object ProductQuantization {
 
   /** The coarse stage alone: (rCorpus, qProbe) — home-cell residuals
     * for the corpus and per-probed-cell residuals for the queries.
-    * Split from [[searchParts]] so the study-only [[candidates]]
-    * accessor never pays for PQ training it does not consume.
-    * `coarseK`/`nProbe` default to the ledger constants; [[graft
-    * .ScaleStudy]]'s pqrecall section sweeps them to measure the
-    * probe-count/list-count recall trade on the clustered fixture.
+    * Split from [[searchParts]] so the [[candidates]] accessor never
+    * pays for PQ training it does not consume. The ledger rows pass the
+    * fixed constants, the sized entry points √n lists; the recall trade
+    * between them is in BASELINE.md, Round 17 pqrecall.
     */
   private def coarseParts(pts: DataFrame, coarseK: Int,
                           nProbe: Int): (DataFrame, DataFrame) = {
@@ -323,8 +323,8 @@ object ProductQuantization {
     (rCorpus, qProbe)
   }
 
-  /** Training + probe state shared by [[adcTopK]] and the study-only
-    * [[candidates]] accessor: (lut, cand, codes).
+  /** Training + probe state of every ADC entry point: (lut, cand,
+    * codes).
     *
     * This is IVFADC proper (Jégou et al. 2011 §IV): a full-dimension
     * coarse quantizer supplies the inverted lists AND the residuals —
@@ -334,8 +334,9 @@ object ProductQuantization {
     * visits its NProbe nearest cells and residualizes PER PROBED CELL
     * (the ADC distance in list L compares residuals in L's frame).
     * The first cut of this operator probed on the sub-0 PQ code of raw
-    * vectors: RecallStudy measured its ceiling at ~0.17 (one 8-dim
-    * subspace barely predicts full-space proximity) — the
+    * vectors: its ceiling measured ~0.17 (BASELINE.md, "Round-15
+    * continuation: PQ ANN ... (x107-x111)"; one 8-dim subspace barely
+    * predicts full-space proximity) — the
     * coarse/residual split and the multi-probe are not optimizations
     * but what makes PQ search work.
     */
@@ -368,13 +369,12 @@ object ProductQuantization {
     (lut, cand, codes)
   }
 
-  /** The coarse inverted-list membership (q_id, c_id) — study-only
-    * accessor: whatever the coarse probe does not list, ADC can never
-    * return, so this IS the recall ceiling RecallStudy measures.
+  /** The coarse inverted-list membership (q_id, c_id) at the ledger
+    * geometry: whatever the coarse probe does not list, ADC can never
+    * return, so this IS the recall ceiling `AnnSizingSpec` asserts.
     */
-  private[graft] def candidates(emb: DataFrame, coarseK: Int = CoarseK,
-                                nProbe: Int = NProbe): DataFrame = {
-    val (rCorpus, qProbe) = coarseParts(ptsCkpt(emb), coarseK, nProbe)
+  private[graft] def candidates(emb: DataFrame): DataFrame = {
+    val (rCorpus, qProbe) = coarseParts(ptsCkpt(emb), CoarseK, NProbe)
     qProbe.select(col("q_id"), col("ccell"))
       .join(rCorpus.select(col("vec_id").as("c_id"), col("ccell")), Seq("ccell"))
       .select(col("q_id"), col("c_id"))

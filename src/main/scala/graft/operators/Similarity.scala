@@ -153,37 +153,19 @@ object Similarity {
     * (`nBits · nTables ≤ 64`, [[tableBuckets]]'s invariant).
     *
     * With nBits FIXED, per-bucket occupancy — and therefore per-probe
-    * candidate sets and batch cost — grows linearly with the corpus (the
-    * x49 scale study records exactly that). Production sizing holds
+    * candidate sets and batch cost — grows linearly with the corpus
+    * (BASELINE.md, "x49 scale study (round 6)"). Production sizing holds
     * occupancy (and with it the recall/cost point) constant by growing
     * the bucket space with the corpus: +1 bit per corpus doubling. The
     * fixed-parameter x48/x49 ledger oracles deliberately do NOT use this
-    * (their replayed-SQL oracles pin nBits); the occupancy-constant scale
-    * study in [[graft.ScaleStudy]] does.
+    * (their replayed-SQL oracles pin nBits); the occupancy-constant
+    * numbers are in BASELINE.md, "Occupancy-constant ANN sizing
+    * (round 8)", and `AnnSizingSpec` pins the flatness at 4×.
     */
   def occupancySizedBits(corpusSize: Long, targetOccupancy: Int, maxBits: Int = 16): Int = {
     require(targetOccupancy > 0, "targetOccupancy must be positive")
     val ratio = math.max(corpusSize.toDouble / targetOccupancy, 1.0)
     math.min(math.max(math.round(math.log(ratio) / math.log(2.0)).toInt, 1), maxBits)
-  }
-
-  /** Exact top-k of every probe vector against every candidate vector
-    * (two (vec_id, v) frames), with [[bruteForceTopK]]'s scoring and
-    * tie-break — the recall baseline for a RESTRICTED search (x49's
-    * new-batch-vs-corpus shape, the occupancy study's ground truth).
-    * The probe side is broadcast: bounded by construction at the callers.
-    */
-  private[graft] def topKBetween(probeVecs: DataFrame, candVecs: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("probe_id").orderBy(col("sim").desc, col("cand_id"))
-    candVecs.select(col("vec_id").as("cand_id"), col("v").as("cv"))
-      .join(broadcast(probeVecs.select(col("vec_id").as("probe_id"), col("v").as("pv"))),
-        col("probe_id") =!= col("cand_id"))
-      .withColumn("sim", cosine(col("pv"), col("cv")))
-      .filter(!isnan(col("sim")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("cand_id"), round(col("sim"), 4).as("sim"), col("rank"))
   }
 
   /** The shared multi-table angular-LSH index side: one fused
@@ -303,10 +285,9 @@ object Similarity {
     * id pairs sharing any (table, bucket, sz). Dedup happens on CANDIDATE
     * IDS before vectors are re-attached — carrying the wide array columns
     * through the multi-table distinct() would shuffle every vector once
-    * per colliding table instead of 16 bytes per pair. Exposed for the
-    * scale study's candidate-count measurement.
+    * per colliding table instead of 16 bytes per pair.
     */
-  private[graft] def lshCandidatePairs(vecs: DataFrame, nBits: Int, nTables: Int): DataFrame = {
+  private def lshCandidatePairs(vecs: DataFrame, nBits: Int, nTables: Int): DataFrame = {
     val withBuckets = tableBuckets(vecs, nBits, nTables)
     val a = withBuckets.select(col("tb").as("ta"), col("sz").as("sza"), col("vec_id").as("vec_a"))
     val b = withBuckets.select(col("tb").as("tb2"), col("sz").as("szb"), col("vec_id").as("vec_b"))
@@ -318,8 +299,9 @@ object Similarity {
   /** The deterministic planted-near-duplicate corpus behind x54: the
     * original vectors plus, for each, a twin `w = v + 0.3·rot1(v)`
     * (rot1 = cyclic shift by one) at `vec_id + PlantOffset`. The
-    * perturbation is the scale-study probe protocol
-    * ([[graft.ScaleStudy]]): cos(v, w) = (1 + 0.3·c1) / √(1.09 + 0.6·c1)
+    * perturbation is the scale-study probe protocol (BASELINE.md,
+    * "x54/x55/x56 land; bucketed cosine near-dup scale study (round
+    * 10)"): cos(v, w) = (1 + 0.3·c1) / √(1.09 + 0.6·c1)
     * with c1 = cos(v, rot1(v)) ≈ 0 on isotropic data, so every planted
     * pair sits at ≈ 0.95–0.97 cosine while unrelated pairs on this
     * fixture stay below 0.7 — a clean margin on both sides of the 0.9
@@ -617,6 +599,38 @@ object Similarity {
       .orderBy("probe_id", "rank")
   }
 
+  /** The k-means-cell assignment relation `(vec_id, v, cell, cos_cent)`
+    * behind [[semDedup]]: 1-NN over the (tiny, broadcast) fixed-point
+    * centroid set; zero-norm vectors (NaN cosine against every centroid)
+    * drop — undefined cell. Per-cell occupancy here sets the Σ|cell|²
+    * pair work (BASELINE.md, "Round-14: scale studies for x87/x88/x89").
+    */
+  private def cellAssignments(emb: DataFrame): DataFrame = {
+    graft.functions.ArrayExpressions.register(emb.sparkSession)
+    import org.apache.spark.sql.expressions.Window
+    val withV0 = emb.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
+    val (centroids, domDim) = fixedPointCentroids(withV0)
+    val withV = withV0.join(broadcast(domDim), size(col("v")) === col("dom_sz"))
+      .drop("dom_sz")
+    // argmax as a map-side-combined struct MAX (KMeans.lloyd's idiom),
+    // NOT a row_number window: the window formulation sort-shuffled the
+    // full n·k crossJoin expansion, where the aggregate partial-combines
+    // each vector's k candidate rows back to ONE before the exchange
+    // (guide §2.2 — shuffle n rows, not n·k). max of (csim, -c_label)
+    // reproduces the window's (csim DESC, c_label ASC) winner exactly:
+    // csim is NaN-filtered so double struct ordering is total, and
+    // c_label is int32 so the negation cannot overflow.
+    withV.crossJoin(broadcast(centroids))
+      .withColumn("csim", cosine(col("v"), col("centroid")))
+      .filter(!isnan(col("csim")))
+      .groupBy(col("vec_id"))
+      .agg(max(struct(col("csim"), (-col("c_label")).as("nlbl"),
+        col("c_label"), col("v"))).as("m"))
+      .select(col("vec_id"), col("m.v").as("v"), col("m.c_label").as("cell"),
+        col("m.csim").as("cos_cent"))
+      .ckpt() // read three times: both pair sides + the keeper join
+  }
+
   /** x87: SemDeDup — semantic deduplication by CLUSTER-SCOPED cosine
     * pruning (Abbas et al. 2023, arXiv:2303.09540): embed → k-means
     * partition → within each cell find pairs with cosine ≥ `tau` →
@@ -650,39 +664,6 @@ object Similarity {
     * Output: one row per vector that belongs to a duplicate component —
     * (vec_id, cell, component, cos_cent, is_keeper), vec_id-ordered.
     */
-  /** The k-means-cell assignment relation `(vec_id, v, cell, cos_cent)`
-    * behind [[semDedup]]: 1-NN over the (tiny, broadcast) fixed-point
-    * centroid set; zero-norm vectors (NaN cosine against every centroid)
-    * drop — undefined cell. Exposed so the scale study can measure
-    * per-cell occupancy (the Σ|cell|² pair-work law) on the exact
-    * relation the operator uses.
-    */
-  private[graft] def cellAssignments(emb: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
-    import org.apache.spark.sql.expressions.Window
-    val withV0 = emb.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-    val (centroids, domDim) = fixedPointCentroids(withV0)
-    val withV = withV0.join(broadcast(domDim), size(col("v")) === col("dom_sz"))
-      .drop("dom_sz")
-    // argmax as a map-side-combined struct MAX (KMeans.lloyd's idiom),
-    // NOT a row_number window: the window formulation sort-shuffled the
-    // full n·k crossJoin expansion, where the aggregate partial-combines
-    // each vector's k candidate rows back to ONE before the exchange
-    // (guide §2.2 — shuffle n rows, not n·k). max of (csim, -c_label)
-    // reproduces the window's (csim DESC, c_label ASC) winner exactly:
-    // csim is NaN-filtered so double struct ordering is total, and
-    // c_label is int32 so the negation cannot overflow.
-    withV.crossJoin(broadcast(centroids))
-      .withColumn("csim", cosine(col("v"), col("centroid")))
-      .filter(!isnan(col("csim")))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("csim"), (-col("c_label")).as("nlbl"),
-        col("c_label"), col("v"))).as("m"))
-      .select(col("vec_id"), col("m.v").as("v"), col("m.c_label").as("cell"),
-        col("m.csim").as("cos_cent"))
-      .ckpt() // read three times: both pair sides + the keeper join
-  }
-
   def semDedup(emb: DataFrame, tau: Double = 0.3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val asg = cellAssignments(emb)

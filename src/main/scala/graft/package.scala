@@ -101,13 +101,28 @@ package object graft {
     * guard, applied uniformly — r21 VERDICT item 3).
     *
     * PRECONDITION (the quantizedPts contract): `ds` must be a
-    * scan/filter/project subtree or an already-materialized LogicalRDD —
-    * `.rdd` on a plan CONTAINING exchanges executes those stages eagerly
-    * under AQE. Every call site passes a raw table scan or a ckpt.
+    * scan/filter/project/union subtree or an already-materialized
+    * LogicalRDD — `.rdd` on a plan CONTAINING exchanges executes those
+    * stages eagerly under AQE. Checked before the `.rdd` call: a plan
+    * with a node that plans an exchange fails the `require`, naming it.
     */
   def spreadNarrow(ds: Dataset[_],
                    cols: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CoGroup, Deduplicate,
+      DeduplicateWithinWatermark, Distinct, Except, GlobalLimit, Intersect, Join, Offset,
+      RebalancePartitions, RepartitionOperation, Sort, Window}
     val df = ds.toDF()
+    val exchange = org.apache.spark.sql.graft.Bridge.planOf(df).collectFirst {
+      case p @ (_: Aggregate | _: Join | _: Window | _: RepartitionOperation |
+                _: RebalancePartitions | _: Distinct | _: Deduplicate |
+                _: DeduplicateWithinWatermark | _: GlobalLimit | _: Offset |
+                _: Intersect | _: Except | _: CoGroup) => p
+      case s: Sort if s.global => s
+    }
+    require(exchange.isEmpty,
+      s"spreadNarrow: input plan contains ${exchange.map(_.nodeName).orNull}, which " +
+        "plans an exchange that `.rdd` would run eagerly — pass a scan/filter/project " +
+        "subtree or ckpt the input first")
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par, cols: _*) else df
   }

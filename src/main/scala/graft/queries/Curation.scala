@@ -153,7 +153,10 @@ object Curation {
     */
   def roundFourteenFunnel(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.load(spark, dir, "documents")
-    val kept1 = graft.operators.Quantiles.iqrKeptDocs(docs)
+    // read three times (decontam, pool, stage count); materialized
+    // because the decontam's shingling spreads it (spreadNarrow takes
+    // exchange-free input, and the fence join is not)
+    val kept1 = graft.operators.Quantiles.iqrKeptDocs(docs).ckpt()
     val contaminated = TextAnalysis.fuzzyContamination(kept1)
       .select(col("doc_id"))
     val pool = kept1.filter(col("doc_id") % 17 =!= 3)

@@ -236,7 +236,7 @@ object StreamingQueries {
                                beforeStart: Replay => Unit = _ => (),
                                afterDrain: (Replay, StreamingQuery) => Unit = (_, _) => ())(
                                sink: (Replay, DataFrame) => DataStreamWriter[_])(
-                               materialize: (Replay, StreamingQuery) => T): T = {
+                               materialize: Replay => T): T = {
     val r = Replay(spool.getOrElse(streamScratchDir(s"graft_stream_${tag}_")),
       s"graft_stream_${tag}_${runSeq.incrementAndGet()}")
     try {
@@ -260,7 +260,7 @@ object StreamingQueries {
           q.processAllAvailable()
           afterDrain(r, q)
           streamCrumb(tag, t0, tSpool, q)
-          materialize(r, q)
+          materialize(r)
         } finally q.stop()
       } finally {
         // repeated bench/verify invocations must not pin one full result
@@ -281,7 +281,7 @@ object StreamingQueries {
                              plan: DataFrame => Dataset[_]): DataFrame =
     replay(spark, tag, feed, tsCol, afterDrain = afterDrain)(
       (r, stream) => plan(stream).writeStream.format("memory").queryName(r.view).outputMode(mode))(
-      (r, _) => spark.table(r.view).ckpt())
+      r => spark.table(r.view).ckpt())
 
   /** The one commutative aggregation both the streaming stage and the
     * sink-reduction use — a single definition, so they cannot drift.
@@ -611,7 +611,7 @@ object StreamingQueries {
       (r, stream) => stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("n_name"), col("event_type"), col("cents"))
         .writeStream.format("parquet").option("path", r.dir("out")).outputMode("append"))(
-      (r, _) => spark.read.parquet(r.dir("out"))
+      r => spark.read.parquet(r.dir("out"))
         .groupBy(col("n_name"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           (sum(col("cents")).cast("double") / 100).as("total_value"))
@@ -666,7 +666,7 @@ object StreamingQueries {
         .dropDuplicatesWithinWatermark("event_id")
         .drop("ts")
         .writeStream.format("parquet").option("path", r.dir("out")).outputMode("append"))(
-      (r, _) => spark.read.parquet(r.dir("out"))
+      r => spark.read.parquet(r.dir("out"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           (sum(col("cents")).cast("double") / 100).as("total_value"),
@@ -944,7 +944,7 @@ object StreamingQueries {
         .foreachBatch { (mb: DataFrame, batchId: Long) =>
           graft.operators.IncrementalPq.encodeSlice(mb, coarse, cb, domSz)
             .write.mode("overwrite").parquet(s"${outDir(r)}/b=$batchId")
-        }) { (r, _) =>
+        }) { r =>
       // Empty-feed guard (r19 ADVICE): zero micro-batches mean no
       // b=<id> dir ever lands and the bare read throws "unable to
       // infer schema" — degrade to an empty codes relation instead,

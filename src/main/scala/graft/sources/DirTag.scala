@@ -40,8 +40,8 @@ private[graft] object DirTag {
     * deliberately trades within-JVM self-invalidation for bench-run
     * stability (see object doc) — so any code path that REWRITES a
     * fixture at the same path mid-session must either use a fresh temp
-    * dir (what ScaleStudy does, and the default expectation for fixture
-    * writers) or call this first, or later layout reads silently serve
+    * dir (what `AnnSizingSpec` does, and the default expectation for
+    * fixture writers) or call this first, or later layout reads silently serve
     * the pre-rewrite files.
     */
   def invalidate(dir: String, src: String): Unit =

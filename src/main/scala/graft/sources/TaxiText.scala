@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.mapred.TextInputFormat
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -8,6 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import java.io.FileNotFoundException
 
 /** Readers for the reference's two text formats (FIXTURES.md §A):
   *
@@ -55,10 +58,17 @@ object TaxiText {
   /** The lines of `path` as a one-column `value` frame, split into at
     * least `defaultParallelism` pieces. Same line splitting (`\n`, `\r`,
     * `\r\n`) and same raw bytes as `spark.read.text`: the line's bytes go
-    * into the row undecoded, so invalid UTF-8 is not replaced.
+    * into the row undecoded, so invalid UTF-8 is not replaced. A path
+    * (or glob) that matches nothing fails here, at read time, as
+    * `spark.read.text` does — not at the first action inside a job. The
+    * glob runs through the context's Hadoop conf, the one the read uses.
     */
   private[graft] def lines(spark: SparkSession, path: String): DataFrame = {
     val sc = spark.sparkContext
+    val hPath = new Path(path)
+    val matched = hPath.getFileSystem(sc.hadoopConfiguration).globStatus(hPath)
+    if (matched == null || matched.isEmpty)
+      throw new FileNotFoundException(s"taxi text: no file matches $path")
     val rows = sc.hadoopFile(path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
         sc.defaultParallelism)
       .mapPartitions { it =>

@@ -39,6 +39,13 @@ object Bridge {
     * above a user-specified `repartition(n, cols)`, which AQE never
     * rewrites. We rewrap the `LogicalRDD` with that `HashPartitioning`,
     * preserving the origin statistics and constraints.
+    *
+    * Any other input throws, naming its plan node: a relation that is
+    * not a checkpointed `LogicalRDD` cannot carry the stamp, and
+    * returning it unstamped would silently re-exchange every downstream
+    * consumer. The one exception is the plan-audit mode
+    * (`spark.graft.ckpt.disable=true`), where [[graft.ckpt]] is an
+    * identity and the input is returned unchanged.
     */
   def withKnownHashPartitioning(df: DataFrame, cols: Seq[String], n: Int): DataFrame =
     planOf(df) match {
@@ -64,6 +71,12 @@ object Bridge {
         ofRows(df.sparkSession, lr.copy(outputPartitioning = part)(
           df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
           Some(lr.stats), Some(lr.constraints)))
-      case _ => df
+      case _ if df.sparkSession.conf.getOption("spark.graft.ckpt.disable").contains("true") =>
+        df
+      case other =>
+        throw new IllegalArgumentException(
+          s"withKnownHashPartitioning: expected a checkpointed LogicalRDD, got " +
+            s"${other.nodeName} — only call this on a relation checkpointed " +
+            s"immediately above repartition($n, $cols)")
     }
 }

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * with the corpus; sizing nBits ~ log2(corpus)
   * ([[Similarity.occupancySizedBits]]) holds candidates/probe flat. These
   * tests pin the sizing arithmetic and MEASURE the flatness claim on a 4×
-  * corpus growth (the full 1×/3×/10× study runs in [[ScaleStudy]] and is
-  * recorded in BASELINE.md).
+  * corpus growth built by [[GenScaleTree.expandTable]] (the 1×/3×/10×
+  * numbers are recorded in BASELINE.md, "Occupancy-constant ANN sizing
+  * (round 8)").
   */
 class AnnSizingSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
@@ -38,15 +39,13 @@ class AnnSizingSpec extends AnyFunSuite {
   test("candidates/probe: flat under sized nBits, grows under fixed nBits (4x corpus)") {
     val nTables = 4
     val targetOcc = 28
-    val emb = Tables.load(spark, sf, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
     // per scale: (corpus size, probes, candidates at given nBits)
     def measure(k: Int, nBitsOf: Long => Int): (Long, Double) = {
       val dirKPath = java.nio.file.Files.createTempDirectory("graft_annsizing")
       var stores = Seq.empty[String]
       try {
-        ScaleStudy.expandEmbeddings(emb, k)
+        GenScaleTree.expandTable(spark, sf, "embeddings", k)
           .write.mode("overwrite").parquet(s"$dirKPath/embeddings.parquet")
         val scaled = spark.read.parquet(s"$dirKPath/embeddings.parquet")
         val newP = IncrementalAnn.isNewVec(col("vec_id"))
@@ -152,13 +151,13 @@ class AnnSizingSpec extends AnyFunSuite {
     // the coarse PROBE CEILING (neighbors whose home list is visited at
     // all) must be near-lossless — routing works on structure. ADC-only
     // recall@10 saturates at ~0.66 at BOTH K=16 and K=256 (measured,
-    // ScaleStudy pqrecall): 99% of its hits land in the RIGHT cluster,
-    // but no practical code size resolves the ε-graded ordering BETWEEN
-    // siblings — which is why production IVFADC ships with exact
-    // re-ranking (x114): the 4·topK ADC shortlist re-ranked by exact
-    // fixed-point distance must recover recall to ~the ceiling.
-    // The isotropic fixture could measure none of this (bulk recall
-    // ~0.10 against a ~0.45 ceiling said nothing).
+    // BASELINE.md, Round 16 and Round 17 pqrecall tables): 99% of its
+    // hits land in the RIGHT cluster, but no practical code size
+    // resolves the ε-graded ordering BETWEEN siblings — which is why
+    // production IVFADC ships with exact re-ranking (x114): the 4·topK
+    // ADC shortlist re-ranked by exact fixed-point distance must recover
+    // recall to ~the ceiling. The isotropic fixture could measure none
+    // of this (bulk recall ~0.10 against a ~0.45 ceiling said nothing).
     val ceiling = exact.join(ProductQuantization.candidates(fix),
       Seq("q_id", "c_id"), "left_semi").count() / 500.0
     assert(ceiling >= 0.95, s"coarse probe ceiling on structured neighbors was $ceiling")

@@ -2152,8 +2152,9 @@ class QueriesSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
     val got = run(docs)
     assert(got == expected, s"got ${got.size} pairs, want ${expected.size}")
-    // the rank (hence the pair set) must not depend on how input arrives
-    assert(run(docs.repartition(13)) == got)
+    // the rank (hence the pair set) must not depend on how input arrives;
+    // ckpt'd because spreadNarrow takes exchange-free input
+    assert(run(docs.repartition(13).ckpt()) == got)
   }
 
   test("x104 multi-pass SNM: the reversed-key pass catches a planted family pass 1 provably misses") {
@@ -2770,9 +2771,10 @@ class QueriesSpec extends AnyFunSuite {
   test("x116/x119 recall floor: incremental re-rank at the sized geometry holds recall@10 >= 0.95 vs exact on the clustered fixture") {
     import graft.operators.{IncrementalPq, ProductQuantization}
     graft.functions.ArrayExpressions.register(spark)
-    // the ScaleStudy incpqrecall claim (recall ≡ the retrain default),
-    // pinned at fixture scale so a silent recall regression in the
-    // incremental re-rank chain fails the suite (the x8/x48 pattern) —
+    // the BASELINE.md Round 19 claim (x116 incremental IVFADC-R recall
+    // ≡ the retrain default), pinned at fixture scale so a silent recall
+    // regression in the incremental re-rank chain fails the suite (the
+    // x8/x48 pattern) —
     // through the SIZED convenience entry, so the catalog-geometry path
     // gets end-to-end exercise too
     val dirP = java.nio.file.Files.createTempDirectory("graft_incpq_recall_spec")

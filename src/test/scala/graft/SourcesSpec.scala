@@ -89,6 +89,18 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("line source fails at read time, naming the path, when nothing matches") {
+    val base = Files.createTempDirectory("graft-lines-missing")
+    base.toFile.deleteOnExit()
+    Seq(base.resolve("absent.txt").toString, base.resolve("*.txt").toString).foreach { p =>
+      // no action is taken: the throw must come from building the frame
+      val e1 = intercept[java.io.FileNotFoundException](TaxiText.readSegments(spark, p))
+      assert(e1.getMessage.contains(p))
+      val e2 = intercept[java.io.FileNotFoundException](TaxiText.readTrips(spark, p))
+      assert(e2.getMessage.contains(p))
+    }
+  }
+
   test("recompress: gz text lands as splittable parquet with the byte-identity contract") {
     import graft.sources.Recompress
     val base = Files.createTempDirectory("graft-recompress")

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Launch a graft main against the sbt-compiled classes WITHOUT sbt — the
-# long-running sweeps (Verify at sf1, Bench draws, ScaleStudy sections)
+# long-running sweeps (Verify at sf1, Bench draws)
 # otherwise serialize behind sbt's project lock. Compile first:
 #   sbt compile
 # then:
