@@ -3,14 +3,31 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared session/consumption plumbing for the timing mains ([[Bench]],
-  * [[Profile]]) — one place for the config, so profile numbers stay
-  * comparable to bench numbers by construction.
+/** Shared session/consumption plumbing for the mains ([[Bench]],
+  * [[Profile]], [[Verify]], [[GenScaleTree]], `Recompress`) — one place
+  * for the config, so profile and correctness numbers stay comparable to
+  * bench numbers by construction.
   */
 object BenchHarness {
 
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf, default 100).
+    * Over all 173 SparkEntry rows at sf0.01 the engine compiles 2,958
+    * distinct classes; one of the ledger benchmark's passes alone
+    * compiles 241. With 100 entries every warm pass recompiled about 225
+    * of them, and one full sweep compiled 5,156 classes; a second warm
+    * sweep took 233.9 s against 146.6 s with the set cached (4 vCPU,
+    * local[4]). 4096 is the next power of two above the working set, for
+    * +23 MB of metaspace (212 → 235 MB). Shared with the test session.
+    */
+  val CodegenCacheEntries = 4096
+
+  /** `cpus` (from `SPARK_GRAFT_CPUS`, else `defaultCpus`) local cores, as
+    * many shuffle partitions, AQE, a UTC session clock, the engine's SQL
+    * extensions ([[GraftExtensions]]) and the codegen cache above.
+    */
+  def session(appName: String, defaultCpus: Int = 32): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -18,6 +35,8 @@ object BenchHarness {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Ad-hoc per-query profiler: runs the named SparkEntry queries `reps`
   * times each (same session config, warmup, and value-consuming evaluation
   * as [[Bench]], via [[BenchHarness]]) and prints every timing, so
@@ -7,18 +11,28 @@ package graft
   * hides. Usage:
   *   sbt "runMain graft.Profile q10_json_extract x9_text_langid" \
   *     [-Dgraft.profile.reps=5]
+  * `--explain` prints each row's formatted physical plan instead;
+  * `--stages` runs one cold pass over the named rows, then one
+  * instrumented warm pass, and prints per row its slowest stages, the
+  * generated classes compiled with their Janino ms, and the count of
+  * [[Tables]]' schema-inference jobs, cold and warm. A warm row that
+  * compiles or infers is re-paying a fixed cost a cache should hold.
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
   */
 object Profile {
 
   /** `--stages` collector: per-stage wall, task time and shuffle bytes,
     * so a slow query's seconds can be attributed to specific operators
-    * (stage names carry the callsite). Guide §1: measure first.
+    * (stage names carry the callsite), plus the count of schema-inference
+    * jobs ([[Tables]]' `parquet` call site). Guide §1: measure first.
     */
   private final class StageLog extends org.apache.spark.scheduler.SparkListener {
     final case class Row(id: Int, name: String, wallMs: Long, taskMs: Long,
                          shReadB: Long, shWriteB: Long, tasks: Int)
     val rows = new scala.collection.concurrent.TrieMap[Int, Row]()
+    val tablesJobs = new java.util.concurrent.atomic.AtomicInteger()
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      if (e.stageInfos.exists(_.name.startsWith("parquet at Tables.scala"))) tablesJobs.incrementAndGet()
     override def onStageCompleted(
         e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
       val si = e.stageInfo
@@ -39,6 +53,31 @@ object Profile {
       }
     }
   }
+
+  /** One instrumented run: wall seconds, its stages, and the generated
+    * classes it compiled (`CodegenMetrics`) with their Janino compile ms.
+    * The codegen counters are JVM-wide, which in local mode includes
+    * every task.
+    */
+  private final case class Pass(sec: Double, log: StageLog, classes: Long, compileMs: Double)
+
+  private def measure(spark: SparkSession)(body: => Unit): Pass = {
+    val log = new StageLog
+    spark.sparkContext.addSparkListener(log)
+    val (n0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val t0 = System.nanoTime()
+    body
+    val sec = (System.nanoTime() - t0) / 1e9
+    // listener bus is async; let the tail events drain
+    Thread.sleep(300)
+    spark.sparkContext.removeSparkListener(log)
+    Pass(sec, log, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
+      (CodeGenerator.compileTime - ns0) / 1e6)
+  }
+
+  private def summary(ps: Seq[Pass]): String =
+    f"${ps.map(_.classes).sum} classes ${ps.map(_.compileMs).sum}%.0f ms compile, " +
+      s"${ps.map(_.log.tablesJobs.get).sum} parquet-at-Tables jobs"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -66,33 +105,30 @@ object Profile {
     val spark = BenchHarness.session("graft-profile")
     BenchHarness.warmup(spark)
     if (noCkptFlag) spark.conf.set("spark.graft.ckpt.disable", "true")
-    val explain = explainFlag
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      if (explain) {
-        println(s"===== $name =====")
-        fn(spark, sfDir).explain("formatted")
-      } else if (stagesFlag) {
-        // one warm run (codegen/JIT), then one instrumented run
-        BenchHarness.consume(fn(spark, sfDir))
-        val log = new StageLog
-        spark.sparkContext.addSparkListener(log)
-        val t0 = System.nanoTime()
-        BenchHarness.consume(fn(spark, sfDir))
-        val sec = (System.nanoTime() - t0) / 1e9
-        // listener bus is async; let the tail events drain
-        Thread.sleep(300)
-        spark.sparkContext.removeSparkListener(log)
-        println(f"===== $name: $sec%.3f s =====")
-        log.report()
-      } else {
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          BenchHarness.consume(fn(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[profile] $name%-24s ${times.map(t => f"$t%.3f").mkString(" ")}")
+    def run(name: String): Unit = BenchHarness.consume(SparkEntry.queries(name)(spark, sfDir))
+    if (explainFlag) names.foreach { name =>
+      println(s"===== $name =====")
+      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+    } else if (stagesFlag) {
+      // a cold pass over EVERY named row, then one instrumented warm
+      // pass: a warm row that recompiles shows the codegen cache losing
+      // its kernels to the rows in between, and a warm schema-inference
+      // job shows a Tables cache miss
+      val cold = names.map(n => measure(spark)(run(n)))
+      val warm = names.map(n => measure(spark)(run(n)))
+      names.lazyZip(cold).lazyZip(warm).foreach { (name, c, w) =>
+        println(f"===== $name: ${w.sec}%.3f s =====")
+        println(s"[codegen] cold ${summary(Seq(c))}; warm ${summary(Seq(w))}")
+        w.log.report()
       }
+      println(s"[codegen] ${names.size} rows: cold ${summary(cold)}; warm ${summary(warm)}")
+    } else names.foreach { name =>
+      val times = (1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        run(name)
+        (System.nanoTime() - t0) / 1e9
+      }
+      println(f"[profile] $name%-24s ${times.map(t => f"$t%.3f").mkString(" ")}")
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,11 @@ object Verify {
       case Array(s, o)      => (s, o, None)
       case Array(s, o, sub) => (s, o, Some(sub.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_CKPT_DIR flips every graft.ckpt call to RELIABLE
     // checkpointing for the whole sweep — the cluster-durability posture
     // proven at ledger scale, not just CheckpointSpec's toy plan.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CKPT_DIR")
-      .foreach(d => builder.config("spark.graft.checkpoint.dir", d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchHarness.session("graft-verify", defaultCpus = 4)
+    sys.env.get("SPARK_GRAFT_CKPT_DIR").foreach(spark.conf.set("spark.graft.checkpoint.dir", _))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

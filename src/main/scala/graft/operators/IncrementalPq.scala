@@ -355,9 +355,9 @@ object IncrementalPq {
   /** x116: incremental IVFADC search WITH exact re-ranking — the
     * composition that was the r18 verdict's top gap: [[incrementalAdcTopK]]
     * has frozen-store economics but plain-ADC recall (~0.66 ordering
-    * saturation on the clustered fixture), while the production default
-    * [[ProductQuantization.adcRerankTopKSized]] has retrieval-grade
-    * recall but retrains per run. Here the ADC shortlist (RerankFactor
+    * saturation on the clustered fixture), while the batch re-rank
+    * [[ProductQuantization.adcRerankTopK]] has retrieval-grade recall
+    * but retrains per run. Here the ADC shortlist (RerankFactor
     * · topK per query) re-ranks by EXACT fixed-point distance against
     * the persisted day-0 [[vectorsStore]] plus the in-flight batch's
     * own vectors — so daily ingest gets BOTH: no corpus re-read,

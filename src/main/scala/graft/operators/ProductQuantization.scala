@@ -211,28 +211,12 @@ object ProductQuantization {
     * ~40% fewer candidates at 10×. Floored at the fixed ledger constant
     * so tiny corpora keep non-degenerate lists; the hash-gated ledger
     * rows (x108/x113) keep the FIXED geometry — their oracles interpolate
-    * CoarseK — while [[adcTopKSized]] is the entry point a production
-    * pipeline calls.
+    * CoarseK — while the incremental stores are built at this geometry
+    * ([[IncrementalPq.incrementalRerankTopKSized]], the production entry
+    * point).
     */
   def sizedCoarseK(corpusSize: Long): Int =
     math.max(CoarseK, math.round(math.sqrt(corpusSize.toDouble)).toInt)
-
-  /** [[adcTopK]] with the coarse stage sized to the corpus: ONE 1-row
-    * driver count (the documented sizing probe, same as
-    * [[Similarity.sizedNearDup]]'s), then the identical IVFADC plan.
-    */
-  def adcTopKSized(emb: DataFrame, topK: Int = 3, nProbe: Int = NProbe): DataFrame = {
-    val pts = ptsCkpt(emb)
-    val adc = adcScores(pts, sizedCoarseK(corpusCount(pts)), nProbe)
-    rankAdc(adc, topK)
-  }
-
-  /** The 1-row driver sizing probe both sized entry points share
-    * (documented pattern: [[Similarity.sizedNearDup]]) — a cheap count
-    * off the shared pts materialization, not a fresh quantize pass.
-    */
-  private def corpusCount(pts: DataFrame): Long =
-    pts.filter(!isQueryCol).count()
 
   /** Probes for the SIZED coarse geometry. With √n lists each list holds
     * ~√n vectors and a planted neighborhood spans a couple of them, so
@@ -245,32 +229,14 @@ object ProductQuantization {
     */
   val SizedNProbe = 4
 
-  /** PRODUCTION DEFAULT ANN entry point — the composed IVFADC-R
-    * configuration: √n-sized coarse lists ([[sizedCoarseK]] — per-query
-    * candidate AND routing cost both O(√n)) probed at [[SizedNProbe]],
-    * plus exact re-ranking over the ADC shortlist ([[adcRerankTopK]]).
-    * The re-rank recovers ALL recall the routing admits (measured
-    * recall ≡ probe ceiling at every scale), so composed recall@10 ≈
-    * 0.99 where plain ADC ranking saturates at ~0.66. A caller wanting
-    * "the ANN search" calls THIS; [[adcTopK]]/[[adcTopKSized]] return
-    * the unrefined ADC ranking and exist as the hash-gated
-    * fixed-geometry ledger surfaces and as the shortlist stage.
-    */
-  def adcRerankTopKSized(emb: DataFrame, topK: Int = 3,
-                         nProbe: Int = SizedNProbe): DataFrame = {
-    val pts = ptsCkpt(emb)
-    rerankOf(pts, adcScores(pts, sizedCoarseK(corpusCount(pts)), nProbe),
-      topK, RerankFactor * topK)
-  }
-
   private[operators] val CoarseDist2 = "fixed_point_dist2(fv, cc)"
 
   /** The coarse stage alone: (rCorpus, qProbe) — home-cell residuals
     * for the corpus and per-probed-cell residuals for the queries.
     * Split from [[searchParts]] so the [[candidates]] accessor never
     * pays for PQ training it does not consume. The ledger rows pass the
-    * fixed constants, the sized entry points √n lists; the recall trade
-    * between them is in BASELINE.md, Round 17 pqrecall.
+    * fixed constants; the recall trade against √n lists
+    * ([[sizedCoarseK]]) is in BASELINE.md, Round 17 pqrecall.
     */
   private def coarseParts(pts: DataFrame, coarseK: Int,
                           nProbe: Int): (DataFrame, DataFrame) = {
@@ -380,23 +346,6 @@ object ProductQuantization {
       .select(col("q_id"), col("c_id"))
   }
 
-  /** x108: IVFADC top-k search (coarse quantizer + residual PQ + ADC).
-    * The coarse quantizer and the PQ codebooks train on the corpus
-    * slice only (vec_id % 10 != 7 — x98's held-out split, so queries
-    * never leak into the model); corpus vectors compress to (home
-    * cell, NumSub residual codes); each query probes its NProbe
-    * nearest coarse cells, residualizes PER PROBED CELL, builds its
-    * exact LUT against the broadcast residual codebook, scans the
-    * probed inverted lists (~NProbe·n/CoarseK candidates), and ranks
-    * candidates by the ADC distance (exact-query-side,
-    * quantized-corpus-side), ties by candidate id.
-    * (q_id, rnk, c_id, adc_d2).
-    *
-    * NOTE: this is the hash-gated ledger surface (fixed geometry), NOT
-    * the production default — plain ADC ranking saturates at recall@10
-    * ≈ 0.66 on the clustered fixture. Production callers want
-    * [[adcRerankTopKSized]] (√n coarse sizing + exact re-rank, ≈ 0.99).
-    */
   /** Members generated per planted cluster by [[clusteredFixture]]. */
   val ClusterMembers = 20
 
@@ -458,12 +407,27 @@ object ProductQuantization {
           "* element_at(v, ((i + m + 1) % size(v)) + 1))").as("embedding"))
   }
 
+  /** x108: IVFADC top-k search (coarse quantizer + residual PQ + ADC).
+    * The coarse quantizer and the PQ codebooks train on the corpus
+    * slice only (vec_id % 10 != 7 — x98's held-out split, so queries
+    * never leak into the model); corpus vectors compress to (home
+    * cell, NumSub residual codes); each query probes its NProbe
+    * nearest coarse cells, residualizes PER PROBED CELL, builds its
+    * exact LUT against the broadcast residual codebook, scans the
+    * probed inverted lists (~NProbe·n/CoarseK candidates), and ranks
+    * candidates by the ADC distance (exact-query-side,
+    * quantized-corpus-side), ties by candidate id.
+    * (q_id, rnk, c_id, adc_d2).
+    *
+    * NOTE: this is the hash-gated ledger surface (fixed geometry), NOT
+    * the production default — plain ADC ranking saturates at recall@10
+    * ≈ 0.66 on the clustered fixture. Production callers want exact
+    * re-ranking at the √n geometry
+    * ([[IncrementalPq.incrementalRerankTopKSized]]).
+    */
   def adcTopK(emb: DataFrame, topK: Int = 3, coarseK: Int = CoarseK,
-              nProbe: Int = NProbe): DataFrame =
-    rankAdc(adcScores(ptsCkpt(emb), coarseK, nProbe), topK)
-
-  /** The ADC ranking tail shared by [[adcTopK]] and [[adcTopKSized]]. */
-  private def rankAdc(adc: DataFrame, topK: Int): DataFrame = {
+              nProbe: Int = NProbe): DataFrame = {
+    val adc = adcScores(ptsCkpt(emb), coarseK, nProbe)
     // per-query partitions are inverted-list-bounded, never corpus-sized
     val w = Window.partitionBy(col("q_id")).orderBy(col("adc_d2"), col("c_id"))
     adc.withColumn("rnk", row_number().over(w).cast("int"))
@@ -516,14 +480,7 @@ object ProductQuantization {
     // (plus x114's clusteredFixture explode) re-evaluated once per
     // consumer (~35 s of duplicated task time in the r22 stage profile)
     val pts = ptsCkpt(emb)
-    rerankOf(pts, adcScores(pts, coarseK, nProbe), topK, l)
-  }
-
-  /** The shortlist + exact-re-rank tail shared by [[adcRerankTopK]] and
-    * [[adcRerankTopKSized]], reading the SAME pts materialization the
-    * ADC stage derived from.
-    */
-  private def rerankOf(pts: DataFrame, adc: DataFrame, topK: Int, l: Int): DataFrame = {
+    val adc = adcScores(pts, coarseK, nProbe)
     val ws = Window.partitionBy(col("q_id")).orderBy(col("adc_d2"), col("c_id"))
     val short = adc.withColumn("srnk", row_number().over(ws))
       .filter(col("srnk") <= l)

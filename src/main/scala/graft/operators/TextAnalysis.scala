@@ -179,25 +179,6 @@ object TextAnalysis {
         max(col("n_chars")).as("mx"))
       .orderBy("lang")
 
-  /** Per-source compressibility profile: DEFLATE ratio of each document
-    * (custom [[graft.functions.ArrayExpressions.DeflateRatio]] expression)
-    * aggregated per source — the Gopher/C4-style junk signal: templated or
-    * repetitive text compresses far below natural prose. Engine-internal
-    * values (zlib-dependent) → rows-only driver check + invariant tests.
-    */
-  def compressionProfile(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
-    docs
-      .select(col("source"),
-        graft.functions.ArrayExpressions.deflateRatio(col("text")).as("ratio"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        round(avg(col("ratio")), 4).as("avg_ratio"),
-        round(min(col("ratio")), 4).as("min_ratio"),
-        round(max(col("ratio")), 4).as("max_ratio"))
-      .orderBy("source")
-  }
-
   /** TF-IDF relevance scoring: the top-k most distinctive terms per
     * document — the inverted-index-shaped aggregation a curation pipeline
     * uses for relevance filtering and topic labeling. idf is the smoothed
@@ -489,7 +470,9 @@ object TextAnalysis {
         max(length(col("q_param"))).as("max_q_len"))
       .orderBy("host")
 
-  /** Driver-oracle form of [[compressionProfile]]: the zlib ratio VALUES
+  /** x24: per-source DEFLATE compressibility (custom
+    * [[graft.functions.ArrayExpressions.DeflateRatio]] expression), the
+    * Gopher/C4-style junk signal, in driver-oracle form: the zlib ratio VALUES
     * are engine-internal (they depend on the JVM's deflate), but the
     * per-source doc counts and the bound/ordering invariants of the ratios
     * are not — emitted as booleans, they hash-compare against a DuckDB

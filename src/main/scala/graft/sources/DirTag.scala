@@ -19,8 +19,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * — forcing a full layout rebuild inside a TIMED run (the r5 q27
   * regression: the driver's 3.373 s is one lineitem bucket-build, 3.37 s
   * measured, landing in a timed call that should have been a warm read).
-  * Shared by [[Bucketed]] and [[PartitionedLayout]] so the keying rule
-  * cannot drift between the two layout stories.
+  * So code that rewrites a fixture mid-session writes it to a fresh dir
+  * (as `AnnSizingSpec` does): at the same path, later layout reads would
+  * serve the pre-rewrite files. Shared by [[Bucketed]] and
+  * [[PartitionedLayout]] so the keying rule cannot drift between the two
+  * layout stories.
   */
 private[graft] object DirTag {
 
@@ -35,17 +38,6 @@ private[graft] object DirTag {
     */
   def dirScope(dir: String): String =
     hex(scala.util.hashing.MurmurHash3.stringHash(dir))
-
-  /** Drop the memoized stamp for `(dir, src)`. The per-JVM memo
-    * deliberately trades within-JVM self-invalidation for bench-run
-    * stability (see object doc) — so any code path that REWRITES a
-    * fixture at the same path mid-session must either use a fresh temp
-    * dir (what `AnnSizingSpec` does, and the default expectation for
-    * fixture writers) or call this first, or later layout reads silently serve
-    * the pre-rewrite files.
-    */
-  def invalidate(dir: String, src: String): Unit =
-    memo.remove((dir, src))
 
   def apply(dir: String, src: String): String =
     memo.computeIfAbsent((dir, src), { key =>

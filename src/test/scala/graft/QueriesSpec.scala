@@ -16,24 +16,33 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("every query runs, is deterministic across two executions, and ships only harness-hashable atomic columns") {
-    for ((name, fn) <- SparkEntry.queries) {
-      val df = fn(spark, sf)
-      // The driver's pandas canonicalizer sorts every column before
-      // hashing; array/map/struct columns arrive as numpy arrays and die
-      // with 'unhashable type' (the q44 round-11 red). Nested results
-      // must cross the wire serialized (to_json — the q39/q44 contract).
-      val nested = df.schema.fields.collect {
-        case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] ||
-          f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] ||
-          f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] =>
-          s"${f.name}: ${f.dataType.simpleString}"
+    // each row in its own try: one row that throws or fails an assertion
+    // must not hide the rows after it; the test fails once, naming all
+    val failures = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      try {
+        val df = fn(spark, sf)
+        // The driver's pandas canonicalizer sorts every column before
+        // hashing; array/map/struct columns arrive as numpy arrays and die
+        // with 'unhashable type' (the q44 round-11 red). Nested results
+        // must cross the wire serialized (to_json — the q39/q44 contract).
+        val nested = df.schema.fields.collect {
+          case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] ||
+            f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] ||
+            f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] =>
+            s"${f.name}: ${f.dataType.simpleString}"
+        }
+        assert(nested.isEmpty,
+          s"$name ships harness-unhashable nested column(s): ${nested.mkString(", ")}")
+        val a = df.collect()
+        val b = fn(spark, sf).collect()
+        assert(a.sameElements(b), s"$name not deterministic")
+        None
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          Some(s"$name: ${e.toString.linesIterator.nextOption().getOrElse("")}")
       }
-      assert(nested.isEmpty,
-        s"$name ships harness-unhashable nested column(s): ${nested.mkString(", ")}")
-      val a = df.collect()
-      val b = fn(spark, sf).collect()
-      assert(a.sameElements(b), s"$name not deterministic")
     }
+    assert(failures.isEmpty, s"${failures.size} row(s) failed:\n${failures.mkString("\n")}")
   }
 
   test("x31: incremental pairs equal whole-corpus pairs restricted to new endpoints") {

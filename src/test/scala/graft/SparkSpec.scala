@@ -14,6 +14,9 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh.toString) // static conf: set at build time
       .config("spark.ui.enabled", "false")
+      // static conf: the mains' codegen cache (BenchHarness), so a warm
+      // pass here hits the compiled classes the way it does there
+      .config("spark.sql.codegen.cache.maxEntries", BenchHarness.CodegenCacheEntries.toLong)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
