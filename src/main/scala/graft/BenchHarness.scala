@@ -22,9 +22,29 @@ object BenchHarness {
     */
   val CodegenCacheEntries = 4096
 
+  /** The engine's static session settings, shared by [[session]] and the
+    * test session, so tests run on what the benchmark measures:
+    *  - a UTC session clock and no UI;
+    *  - the engine's SQL extensions ([[GraftExtensions]]);
+    *  - the codegen cache above;
+    *  - artifact isolation off. `CodeGenerator` keys its cache on the
+    *    thread's context class loader as well as the code, and with
+    *    isolation on every cloned session (each streaming query runs on
+    *    one) gets a fresh loader, so a replayed stream recompiled all of
+    *    its classes; nothing in the engine adds session artifacts;
+    *  - `file:` paths through [[graft.sources.ForklessLocalFs]], which
+    *    sets permissions and reads link status without forking a shell.
+    */
+  val SessionConf: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.extensions" -> classOf[GraftExtensions].getName,
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.artifact.isolation.enabled" -> "false"
+  ) ++ graft.sources.ForklessLocalFs.HadoopConf.map { case (k, v) => s"spark.hadoop.$k" -> v }
+
   /** `cpus` (from `SPARK_GRAFT_CPUS`, else `defaultCpus`) local cores, as
-    * many shuffle partitions, AQE, a UTC session clock, the engine's SQL
-    * extensions ([[GraftExtensions]]) and the codegen cache above.
+    * many shuffle partitions, AQE and [[SessionConf]].
     */
   def session(appName: String, defaultCpus: Int = 32): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
@@ -33,10 +53,7 @@ object BenchHarness {
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config(SessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

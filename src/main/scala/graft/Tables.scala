@@ -55,20 +55,20 @@ object Tables {
 
   /** (path, length, mtime) of every file under `path`, read live; empty
     * for a missing path, whose read then fails with Spark's own error.
+    * Walks with `listStatus`, not `listFiles`: the located status that
+    * `listFiles` builds reads each file's permissions, which the local
+    * filesystem does by forking `ls -ld` per file.
     */
   private def stamp(spark: SparkSession, path: String): Stamp = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else {
-      val files = fs.listFiles(p, true)
-      val out = Seq.newBuilder[(String, Long, Long)]
-      while (files.hasNext) {
-        val f = files.next()
-        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      out.result().sorted
+    val out = Seq.newBuilder[(String, Long, Long)]
+    def walk(q: Path): Unit = fs.listStatus(q).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else out += ((f.getPath.toString, f.getLen, f.getModificationTime))
     }
+    if (fs.exists(p)) walk(p)
+    out.result().sorted
   }
 
   /** The parquet schema of `path` under the session's current inference

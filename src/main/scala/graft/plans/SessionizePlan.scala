@@ -62,8 +62,8 @@ object SessionizePlan {
         outputSchema.map(f => AttributeReference(f.name, f.dataType, f.nullable)()))
   }
 
-  /** Planner strategy (inject via `spark.experimental.extraStrategies` or a
-    * SparkSessionExtensions planner-strategy hook).
+  /** Planner strategy, injected into every engine session by
+    * [[graft.GraftExtensions]].
     */
   object SessionizeStrategy extends org.apache.spark.sql.execution.SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -152,13 +152,9 @@ object SessionizePlan {
   }
 
   /** Public API: positions DataFrame → trips DataFrame through the custom
-    * operator. Idempotently installs the strategy on the session.
+    * operator. The session plans it through [[graft.GraftExtensions]].
     */
-  def trips(spark: SparkSession, positions: DataFrame): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(SessionizeStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SessionizeStrategy
+  def trips(spark: SparkSession, positions: DataFrame): DataFrame =
     org.apache.spark.sql.graft.Bridge.ofRows(spark,
       SessionizeTrips.create(org.apache.spark.sql.graft.Bridge.planOf(positions)))
-  }
 }

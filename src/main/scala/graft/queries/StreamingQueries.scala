@@ -50,15 +50,18 @@ object StreamingQueries {
   private val StreamParts = "4"
 
   /** Scratch root for spool + checkpoint of the streaming ledger rows.
-    * Prefers a tmpfs (`/dev/shm`) when one is writable: every micro-batch
-    * fsyncs the offset WAL, the commit log, and one delta file PER state
-    * store PER partition — on ext4 those fsyncs are the dominant
-    * streaming wall locally (measured on x50: state-store commit ≈
-    * 0.8 s/batch of a ≈1.1 s trigger). The checkpoint contract is
-    * unchanged: in production it points at durable DFS storage by
-    * configuration; locally, disk under java.io.tmpdir is no more
-    * durable across machine loss than tmpfs, so the bench measures
-    * compute instead of local fsync latency. Override with
+    * Prefers a tmpfs (`/dev/shm`) when one is writable. Every micro-batch
+    * writes and renames the offset WAL, the commit log, and one delta
+    * file PER state store PER partition. The state-store commit cost once
+    * put down to ext4 fsyncs (x50: ≈ 0.8 s/batch of a ≈ 1.1 s trigger)
+    * was process forks, a `chmod` or `readlink` per file, which
+    * [[graft.sources.ForklessLocalFs]] removed; since then the medium
+    * hardly matters: x50 at sf0.1 (4 vCPU, local[4], four warm runs)
+    * takes 3.6-4.5 s with its scratch on ext4 and 3.4-4.4 s on
+    * `/dev/shm`, state commits 50-210 ms/batch on both. The checkpoint
+    * contract is unchanged: in production it points at durable DFS
+    * storage by configuration; locally, disk under java.io.tmpdir is no
+    * more durable across machine loss than tmpfs. Override with
     * -Dgraft.stream.scratch=<dir>.
     */
   private def streamScratchDir(prefix: String): Path = {

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The two per-row fixed costs a warm row must not re-pay: parquet
   * schema inference in [[Tables.load]] (cached per file stamp) and
   * codegen compiles (the session's codegen cache holds the ledger's
-  * kernels, [[BenchHarness.CodegenCacheEntries]]).
+  * kernels, [[BenchHarness.CodegenCacheEntries]], under one class loader).
   */
 class FixedCostSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
@@ -102,11 +102,13 @@ class FixedCostSpec extends AnyFunSuite {
   }
 
   test("a second pass over the batch ledger rows compiles no generated class") {
-    // the benchmark's ledger rows (perfbench/run.py LEDGER) without the
-    // streaming row x73, whose per-run stream plans compile afresh
+    // the benchmark's ledger rows (perfbench/run.py LEDGER); the streaming
+    // row x73 replays on a cloned session, so it also pins the codegen
+    // cache's class loader (BenchHarness.SessionConf, artifact isolation)
     val rows = Seq("q3_filter_agg", "q15_string_funcs", "q7_set_ops", "q38_unpivot",
       "q27_bucketed_join", "q9_time_windows", "q21_pivot", "q6_window_funcs",
-      "q5_topk_having", "q31_scd2_history", "q8_sessionize", "q22_skew_join", "x94_snm_dedup")
+      "q5_topk_having", "q31_scd2_history", "q8_sessionize", "q22_skew_join", "x94_snm_dedup",
+      "x73_stream_funnel")
     def pass(): Seq[(String, Long)] = rows.map { r =>
       val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       BenchHarness.consume(SparkEntry.queries(r)(spark, sf))
@@ -120,6 +122,7 @@ class FixedCostSpec extends AnyFunSuite {
     val second = pass().filter(_._2 > 0)
     assert(second.isEmpty,
       s"the warm pass recompiled ${second.map(_._2).sum} classes (${second.mkString(", ")}): " +
-        s"the codegen cache (${BenchHarness.CodegenCacheEntries} entries) lost the ledger's kernels")
+        s"the codegen cache (${BenchHarness.CodegenCacheEntries} entries) lost the ledger's kernels " +
+        "or a replay compiled under a new class loader")
   }
 }

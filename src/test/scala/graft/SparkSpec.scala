@@ -11,12 +11,10 @@ object SparkSpec {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh.toString) // static conf: set at build time
-      .config("spark.ui.enabled", "false")
-      // static conf: the mains' codegen cache (BenchHarness), so a warm
-      // pass here hits the compiled classes the way it does there
-      .config("spark.sql.codegen.cache.maxEntries", BenchHarness.CodegenCacheEntries.toLong)
+      // the mains' static settings: extensions, codegen cache, class
+      // loader and local filesystem
+      .config(BenchHarness.SessionConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
