@@ -1,10 +1,12 @@
 package graft.queries
 
 import graft.functions.Geo
-import graft.operators.{TaxiFsm, TaxiPosition, TaxiTrip}
+import graft.operators.TaxiTrip
 import graft.sources.TaxiText
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Path, Paths}
 
 /** The reference's two programs re-expressed Spark-first.
   *
@@ -19,10 +21,21 @@ import org.apache.spark.sql.functions._
   */
 object TaxiQueries {
 
-  /** Committed fixture dir (FIXTURES.md §A); absolute so the DuckDB oracle
-    * can read the same files.
+  /** Committed fixture dir (FIXTURES.md §A), found in the checkout that
+    * holds the working directory; absolute so the DuckDB oracle can read
+    * the same files.
     */
-  val FixtureDir = "/root/repo/src/test/resources/taxi"
+  lazy val FixtureDir: String = fixtureDirFrom(Paths.get("").toAbsolutePath)
+
+  /** `src/test/resources/taxi` under the first of `start` and its
+    * ancestors that holds it; throws, naming `start`, when none does.
+    */
+  private[graft] def fixtureDirFrom(start: Path): String =
+    Iterator.iterate(start)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve("src/test/resources/taxi")).find(Files.isDirectory(_))
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"taxi fixtures: neither $start nor any ancestor holds src/test/resources/taxi"))
+      .toString
 
   // ---------------------------------------------------------------- Q1
 
@@ -68,7 +81,7 @@ object TaxiQueries {
       .filter(Geo.isValidPosition(expr("try_cast(latS AS double)"), expr("try_cast(longS AS double)")))
   }
 
-  private def positionsDf(segments: DataFrame): DataFrame =
+  private[graft] def positionsDf(segments: DataFrame): DataFrame =
     segmentsToPositions(segments)
       .withColumn("ts", Geo.tsToEpoch(col("tsS")))
       .filter(col("ts").isNotNull) // malformed timestamp -> dropped, not crashed
@@ -85,19 +98,6 @@ object TaxiQueries {
   def reconstructTrips(spark: SparkSession, segments: DataFrame): Dataset[TaxiTrip] = {
     import spark.implicits._
     graft.plans.SessionizePlan.trips(spark, positionsDf(segments)).as[TaxiTrip]
-  }
-
-  /** Typed-API variant of the same pipeline (`Dataset.mapPartitions` over
-    * the same FSM) — kept as a cross-check of the custom operator and as
-    * the no-internal-APIs fallback.
-    */
-  def reconstructTripsTyped(spark: SparkSession, segments: DataFrame): Dataset[TaxiTrip] = {
-    import spark.implicits._
-    positionsDf(segments)
-      .as[TaxiPosition]
-      .repartition(col("taxi"))
-      .sortWithinPartitions("taxi", "tsS", "latS", "longS", "status")
-      .mapPartitions(TaxiFsm.sessionizePartition _)
   }
 
   /** Emitted trips formatted exactly as the reference's Job-1 output lines

@@ -69,23 +69,55 @@ class SourcesSpec extends AnyFunSuite {
     assert(trips >= cores, s"trips: $trips partitions on $cores cores")
   }
 
-  test("line source returns exactly spark.read.text's rows, byte for byte") {
-    def bytesOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.select(hex(col("value").cast("binary"))).collect().map(_.getString(0)).toSeq
-    def same(path: String): Unit =
-      assert(bytesOf(TaxiText.lines(spark, path)) == bytesOf(spark.read.text(path)), path)
-    same(s"$dir/segments.txt")
-    same(s"$dir/trips.txt")
-    // CRLF endings, an empty line, an invalid UTF-8 byte and no final
+  test("field source equals the split expressions over spark.read.text, byte for byte") {
+    import TaxiText.Rule
+    def hexes(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+      df.select(transform(col("f"), x => hex(x.cast("binary")))).collect()
+        .map(_.getSeq[String](0)).toSeq
+    // each reader's `f` against the expression its rule replaces, run over
+    // spark.read.text's rows with the same arity filter; returns the count
+    def same(path: String): Seq[Int] = Seq(
+      (9, TaxiText.readSegments(spark, path), split(regexp_replace(col("value"), "'", ""), ",", -1)),
+      (11, TaxiText.fields(spark, path, 11, Rule.Trips), split(col("value"), "\\s+", -1))
+    ).map { case (arity, got, old) =>
+      val want = hexes(spark.read.text(path).select(old.as("f")).filter(size(col("f")) === arity))
+      val have = hexes(got)
+      (0 to want.size).find(i => have.lift(i) != want.lift(i))
+        .foreach(i => fail(s"arity $arity on $path, row $i: ${have.lift(i)} != ${want.lift(i)}"))
+      want.size
+    }
+    assert(same(s"$dir/segments.txt").head > 0)
+    assert(same(s"$dir/trips.txt").last > 0)
+    def ascii(s: String) = s.getBytes("US-ASCII")
+    def utf8(s: String) = s.getBytes("UTF-8")
+    val ff = Array(0xff.toByte)
+    // CRLF, CR and LF endings, an empty line, a 0xFF byte, a valid
+    // multi-byte character, quotes inside fields, leading and trailing
+    // empty fields, 8/9/10 and 10/11/12 fields, runs of tab/\x0B/\f,
+    // leading and trailing blanks, a U+00A0 (not in \s) and no final
     // newline; each lead-in shifts where the core-count splits cut
-    val body = "a,b\r\n\r\nc d\r\n".getBytes("UTF-8") ++ Array[Byte](0x62, 0xff.toByte, 0x63) ++
-      "\r\n\nlast".getBytes("UTF-8")
-    val base = Files.createTempDirectory("graft-lines")
+    val body = Seq(
+      ascii("a,b\r\n\r\n"),
+      ascii("'2008-05-17 10:00:00',37.1,'M',it's,o''k,,'',x,y\r\n"),
+      ascii("1,2,3,4,5,6,7,8\n1,2,3,4,5,6,7,8,9,10\n"),
+      ascii(",lead,2,3,4,5,6,7,8\na,b,c,d,e,f,g,h,\n"),
+      ascii("1,2,"), ff, ascii(",4,5,6,7,8,9\n"),
+      utf8("1,\u00e9,3,4,5,6,7,8,9\n1,2,3,4,5,6,7,8,9\r"),
+      ascii("1 2 3 4 5 6 7 8 9 10 11\n 1 2 3 4 5 6 7 8 9 10\n1 2 3 4 5 6 7 8 9 10\t\n"),
+      ascii("1\t\u000b\f2 3 4 5 6 7 8 9 10 11\n"),
+      ascii("1 2 3 4 5 6 7 8 9 10 11 12\n1 2 3 4 5 6 7 8 9 10\n"),
+      utf8("a\u00a0b 2 3 4 5 6 7 8 9 10 11\n"),
+      ascii("1 2 "), ff, ascii(" 4 5 6 7 8 9 10 11\n"),
+      utf8("\u00e9 2 3 4 5 6 7 8 9 10 11\r\n  \t  1 2 3 4 5 6 7 8 9  \n"),
+      ascii("last")
+    ).reduce(_ ++ _)
+    val base = Files.createTempDirectory("graft-fields")
     base.toFile.deleteOnExit()
     (0 to 3).foreach { lead =>
-      val f = base.resolve(s"lines$lead.txt")
+      val f = base.resolve(s"fields$lead.txt")
       Files.write(f, ("x" * lead).getBytes("UTF-8") ++ body)
-      same(f.toString)
+      // 6 segment lines and 8 trip lines have the right arity
+      assert(same(f.toString) == Seq(6, 8), f.toString)
     }
   }
 
@@ -99,6 +131,16 @@ class SourcesSpec extends AnyFunSuite {
       val e2 = intercept[java.io.FileNotFoundException](TaxiText.readTrips(spark, p))
       assert(e2.getMessage.contains(p))
     }
+  }
+
+  test("taxi fixture dir resolves from inside the checkout and fails loudly outside it") {
+    val root = Paths.get(dir).getParent.getParent.getParent.getParent
+    assert(TaxiQueries.fixtureDirFrom(root) == dir)
+    assert(TaxiQueries.fixtureDirFrom(root.resolve("src/main/scala/graft")) == dir)
+    val outside = Files.createTempDirectory("graft-nofixture")
+    outside.toFile.deleteOnExit()
+    val e = intercept[java.io.FileNotFoundException](TaxiQueries.fixtureDirFrom(outside))
+    assert(e.getMessage.contains(outside.toString))
   }
 
   test("recompress: gz text lands as splittable parquet with the byte-identity contract") {

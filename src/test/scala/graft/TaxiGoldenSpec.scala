@@ -1,7 +1,9 @@
 package graft
 
+import graft.operators.{TaxiFsm, TaxiPosition, TaxiTrip}
 import graft.queries.TaxiQueries
 import graft.sources.TaxiText
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.io.Source
@@ -13,6 +15,20 @@ import scala.io.Source
 class TaxiGoldenSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   private val dir = TaxiQueries.FixtureDir
+
+  /** Typed-API variant of [[TaxiQueries.reconstructTrips]]
+    * (`Dataset.mapPartitions` over the same FSM): a cross-check of the
+    * custom operator that uses no internal API.
+    */
+  private def reconstructTripsTyped(segments: DataFrame): Dataset[TaxiTrip] = {
+    val s = spark
+    import s.implicits._
+    TaxiQueries.positionsDf(segments)
+      .as[TaxiPosition]
+      .repartition($"taxi")
+      .sortWithinPartitions("taxi", "tsS", "latS", "longS", "status")
+      .mapPartitions(TaxiFsm.sessionizePartition _)
+  }
 
   private def golden(name: String): List[String] = {
     val src = Source.fromFile(s"$dir/$name")
@@ -73,7 +89,7 @@ class TaxiGoldenSpec extends AnyFunSuite {
   test("custom-plan sessionizer == typed mapPartitions sessionizer, one exchange in plan") {
     val segs = TaxiText.readSegments(spark, s"$dir/segments.txt")
     val viaPlan = TaxiQueries.reconstructTrips(spark, segs)
-    val viaTyped = TaxiQueries.reconstructTripsTyped(spark, segs)
+    val viaTyped = reconstructTripsTyped(segs)
     assert(viaPlan.collect().map(_.toString).sorted.toList ==
       viaTyped.collect().map(_.toString).sorted.toList)
     val physical = viaPlan.queryExecution.executedPlan.toString
