@@ -1876,30 +1876,6 @@ object SparkEntry {
            |  WHERE bit_count(xor(${signed64("a.fpu")}, ${signed64("b.fpu")})) <= 3
            |  QUALIFY row_number() OVER (PARTITION BY b.doc_id ORDER BY a.doc_id) = 1)
            |ORDER BY doc_id""".stripMargin),
-    "q2_airport_trips" ->
-      s"""SELECT taxi, start_time, start_lat, start_long, stop_time, stop_lat, stop_long,
-         |       dist_km, revenue, date
-         |FROM read_csv('${TaxiQueries.FixtureDir}/golden_q2_trips.txt', delim=' ', header=false,
-         |  columns={'taxi':'int','start_time':'double','start_lat':'double','start_long':'double',
-         |           'stop_time':'double','stop_lat':'double','stop_long':'double','is_airport':'varchar',
-         |           'dist_km':'double','revenue':'double','date':'varchar'})
-         |ORDER BY taxi, start_time""".stripMargin,
-    "q2_daily_revenue" ->
-      s"""SELECT date, daily_revenue
-         |FROM read_csv('${TaxiQueries.FixtureDir}/golden_q2_daily.txt', delim='\t', header=false,
-         |  columns={'date':'varchar','daily_revenue':'double'})
-         |ORDER BY date""".stripMargin,
-    "q2_total_revenue" ->
-      s"""SELECT total_revenue
-         |FROM read_csv('${TaxiQueries.FixtureDir}/golden_q2_total.txt', header=false,
-         |  columns={'total_revenue':'double'})""".stripMargin,
-    // the streaming FSM twin carries q2_daily's golden: stream==batch in
-    // the driver's hard signal for the flagship pipeline
-    "x47_streaming_taxi_fsm" ->
-      s"""SELECT date, daily_revenue
-         |FROM read_csv('${TaxiQueries.FixtureDir}/golden_q2_daily.txt', delim='\t', header=false,
-         |  columns={'date':'varchar','daily_revenue':'double'})
-         |ORDER BY date""".stripMargin,
     // the three REAL decode paths replayed from their plant formulas:
     // image = x79's pixel closed form, audio = x80's PCM closed form
     // (minus the id%9==4 truncated drops), video = x86's per-frame pixel
@@ -1989,18 +1965,6 @@ object SparkEntry {
         |           ORDER BY tf.tf * ln((n.n_docs + 1.0) / (df.df + 1.0)) DESC, tf.token ASC) AS rk
         |  FROM tf JOIN df USING (token) CROSS JOIN n
         |) WHERE rk <= 3 ORDER BY doc_id, tfidf DESC, token""".stripMargin,
-    "q1_trip_histogram" ->
-      s"""SELECT bin, count(*) AS n FROM (
-         |  SELECT CASE WHEN dist >= 80 THEN '>=80'
-         |              ELSE printf('%02d', CAST(floor(dist / 2) * 2 AS int)) END AS bin
-         |  FROM (
-         |    SELECT 6371.009 * sqrt(pow(radians(start_lat - stop_lat), 2)
-         |         + pow(cos(radians((start_lat + stop_lat) / 2)) * radians(start_long - stop_long), 2)) AS dist
-         |    FROM read_csv('${TaxiQueries.FixtureDir}/trips.txt', delim=' ', header=false,
-         |      columns={'taxi':'int','start_time':'double','start_lat':'double','start_long':'double',
-         |               'stop_time':'double','stop_lat':'double','stop_long':'double','is_airport':'varchar',
-         |               'dist_km':'double','revenue':'double','date':'varchar'})))
-         |GROUP BY bin ORDER BY bin""".stripMargin,
     "q3_filter_agg" ->
       """SELECT CAST(sum(CAST(l_extendedprice AS decimal(18,2)) * CAST(l_discount AS decimal(18,2))) AS double) AS revenue,
         |       CAST(sum(CAST(l_quantity AS decimal(18,2))) AS double) AS sum_qty,
@@ -3945,5 +3909,49 @@ object SparkEntry {
         |       round(quantile_cont(n_chars, 0.99), 6) AS q99,
         |       min(n_chars) AS mn, max(n_chars) AS mx
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
+  ) ++ scala.util.Try(TaxiQueries.FixtureDir).fold(_ => Map.empty[String, String], taxiOracleSql)
+
+  /** The taxi rows' oracles read the committed fixture files in `dir`. They
+    * are kept apart so that a missing fixture fails only those rows (they
+    * resolve [[TaxiQueries.FixtureDir]] themselves and report it), not the
+    * whole oracle map.
+    */
+  private def taxiOracleSql(dir: String): Map[String, String] = Map(
+    "q1_trip_histogram" ->
+      s"""SELECT bin, count(*) AS n FROM (
+         |  SELECT CASE WHEN dist >= 80 THEN '>=80'
+         |              ELSE printf('%02d', CAST(floor(dist / 2) * 2 AS int)) END AS bin
+         |  FROM (
+         |    SELECT 6371.009 * sqrt(pow(radians(start_lat - stop_lat), 2)
+         |         + pow(cos(radians((start_lat + stop_lat) / 2)) * radians(start_long - stop_long), 2)) AS dist
+         |    FROM read_csv('$dir/trips.txt', delim=' ', header=false,
+         |      columns={'taxi':'int','start_time':'double','start_lat':'double','start_long':'double',
+         |               'stop_time':'double','stop_lat':'double','stop_long':'double','is_airport':'varchar',
+         |               'dist_km':'double','revenue':'double','date':'varchar'})))
+         |GROUP BY bin ORDER BY bin""".stripMargin,
+    "q2_airport_trips" ->
+      s"""SELECT taxi, start_time, start_lat, start_long, stop_time, stop_lat, stop_long,
+         |       dist_km, revenue, date
+         |FROM read_csv('$dir/golden_q2_trips.txt', delim=' ', header=false,
+         |  columns={'taxi':'int','start_time':'double','start_lat':'double','start_long':'double',
+         |           'stop_time':'double','stop_lat':'double','stop_long':'double','is_airport':'varchar',
+         |           'dist_km':'double','revenue':'double','date':'varchar'})
+         |ORDER BY taxi, start_time""".stripMargin,
+    "q2_daily_revenue" ->
+      s"""SELECT date, daily_revenue
+         |FROM read_csv('$dir/golden_q2_daily.txt', delim='\t', header=false,
+         |  columns={'date':'varchar','daily_revenue':'double'})
+         |ORDER BY date""".stripMargin,
+    "q2_total_revenue" ->
+      s"""SELECT total_revenue
+         |FROM read_csv('$dir/golden_q2_total.txt', header=false,
+         |  columns={'total_revenue':'double'})""".stripMargin,
+    // the streaming FSM twin carries q2_daily's golden: stream==batch in
+    // the driver's hard signal for the flagship pipeline
+    "x47_streaming_taxi_fsm" ->
+      s"""SELECT date, daily_revenue
+         |FROM read_csv('$dir/golden_q2_daily.txt', delim='\t', header=false,
+         |  columns={'date':'varchar','daily_revenue':'double'})
+         |ORDER BY date""".stripMargin
   )
 }

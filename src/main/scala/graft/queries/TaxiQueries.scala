@@ -21,20 +21,27 @@ import java.nio.file.{Files, Path, Paths}
   */
 object TaxiQueries {
 
-  /** Committed fixture dir (FIXTURES.md §A), found in the checkout that
-    * holds the working directory; absolute so the DuckDB oracle can read
-    * the same files.
+  /** Committed fixture dir (FIXTURES.md §A); absolute so the DuckDB oracle
+    * can read the same files. It is looked up from where this code was
+    * loaded (sbt's `target/` and perfbench's `.bench_build/` both sit in
+    * the checkout), then from the working directory, so a run from any
+    * directory finds it.
     */
-  lazy val FixtureDir: String = fixtureDirFrom(Paths.get("").toAbsolutePath)
+  lazy val FixtureDir: String = fixtureDirFrom(fixtureStarts(Paths.get("").toAbsolutePath))
 
-  /** `src/test/resources/taxi` under the first of `start` and its
-    * ancestors that holds it; throws, naming `start`, when none does.
+  /** Where this code was loaded from, then `workDir`. */
+  private[graft] def fixtureStarts(workDir: Path): Seq[Path] =
+    Option(getClass.getProtectionDomain.getCodeSource)
+      .map(cs => Paths.get(cs.getLocation.toURI)).toSeq :+ workDir
+
+  /** `src/test/resources/taxi` under the first of `starts` and their
+    * ancestors that holds it; throws, naming `starts`, when none does.
     */
-  private[graft] def fixtureDirFrom(start: Path): String =
-    Iterator.iterate(start)(_.getParent).takeWhile(_ != null)
+  private[graft] def fixtureDirFrom(starts: Seq[Path]): String =
+    starts.iterator.flatMap(Iterator.iterate(_)(_.getParent).takeWhile(_ != null))
       .map(_.resolve("src/test/resources/taxi")).find(Files.isDirectory(_))
       .getOrElse(throw new java.io.FileNotFoundException(
-        s"taxi fixtures: neither $start nor any ancestor holds src/test/resources/taxi"))
+        s"taxi fixtures: no ancestor of ${starts.mkString(", ")} holds src/test/resources/taxi"))
       .toString
 
   // ---------------------------------------------------------------- Q1

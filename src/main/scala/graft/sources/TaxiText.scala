@@ -69,34 +69,35 @@ object TaxiText {
     hit && cores > 1
   }
 
-  /** How a line's bytes become fields. Each rule equals, byte for byte,
-    * the Spark expression the reference's `String` code maps to.
+  /** How a line's bytes become `arity` fields. Each rule equals, byte for
+    * byte, the Spark expression the reference's `String` code maps to.
     */
-  sealed abstract class Rule
+  sealed abstract class Rule(val arity: Int)
   object Rule {
 
     /** Drop every `'` (0x27), cut at every `,` (0x2C): the reference's
       * `replace("'", "").split(",", -1)` (AirportTripsRevenue.java:153),
-      * equal to `split(regexp_replace(value, "'", ""), ",", -1)`.
+      * equal to `split(regexp_replace(value, "'", ""), ",", -1)`; 9 fields.
       */
-    case object Segments extends Rule
+    case object Segments extends Rule(9)
 
     /** Cut at each run of the six bytes Java's `\s` matches (space, `\t`,
       * `\n`, `\x0B`, `\f`, `\r`), keeping leading and trailing empty
       * fields: `split("\\s+", -1)` (SparkTripLength.java:44-49), equal to
-      * `split(value, "\\s+", -1)`.
+      * `split(value, "\\s+", -1)`; 11 fields.
       */
-    case object Trips extends Rule
+    case object Trips extends Rule(11)
   }
 
   private def isBlank(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
-  /** Cuts one line into at most `arity` fields, writing each accepted
+  /** Cuts one line into at most `rule.arity` fields, writing each accepted
     * line as an `UnsafeRow` with one `array<string>` column. Buffers are
     * reused across the lines of a partition, so the returned row is too.
     */
-  private final class Cutter(arity: Int, rule: Rule) {
+  private final class Cutter(rule: Rule) {
+    private val arity = rule.arity
     private val starts = new Array[Int](arity)
     private val ends = new Array[Int](arity)
     private var kept = new Array[Byte](256)
@@ -162,14 +163,14 @@ object TaxiText {
     StructType(Seq(StructField("f", ArrayType(StringType, containsNull = false), nullable = false)))
 
   /** The lines of `path` cut into an `array<string>` column `f` by `rule`;
-    * lines without exactly `arity` fields are dropped here. Lines split at
+    * lines without exactly `rule.arity` fields are dropped here. Lines split at
     * `\n`, `\r` and `\r\n`, as `spark.read.text` splits them, and plain text
     * reads as at least `defaultParallelism` pieces. A path (or glob) that
     * matches nothing fails here, at read time, as `spark.read.text` does —
     * not at the first action inside a job. The glob runs through the
     * context's Hadoop conf, the one the read uses.
     */
-  private[graft] def fields(spark: SparkSession, path: String, arity: Int, rule: Rule): DataFrame = {
+  private[graft] def fields(spark: SparkSession, path: String, rule: Rule): DataFrame = {
     val sc = spark.sparkContext
     val hPath = new Path(path)
     val matched = hPath.getFileSystem(sc.hadoopConfiguration).globStatus(hPath)
@@ -178,7 +179,7 @@ object TaxiText {
     val rows = sc.hadoopFile(path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
         sc.defaultParallelism)
       .mapPartitions { it =>
-        val cut = new Cutter(arity, rule)
+        val cut = new Cutter(rule)
         it.map { case (_, t) => cut(t.getBytes, t.getLength) }.filter(_ != null)
       }
     Bridge.internalCreateDataFrame(spark, rows, FieldsSchema)
@@ -190,7 +191,7 @@ object TaxiText {
     */
   def readSegments(spark: SparkSession, path: String): DataFrame = {
     warnIfNotSplittable(spark, path)
-    fields(spark, path, 9, Rule.Segments)
+    fields(spark, path, Rule.Segments)
   }
 
   /** Trips file parsed to typed columns. Only the four coordinate fields are
@@ -203,7 +204,7 @@ object TaxiText {
     // the job instead of dropping the row.
     def d(i: Int) = expr(s"try_cast(f[${i - 1}] AS double)")
     warnIfNotSplittable(spark, path)
-    fields(spark, path, 11, Rule.Trips)
+    fields(spark, path, Rule.Trips)
       .select(
         expr("try_cast(f[0] AS int)").as("taxi"),
         d(2).as("start_time"),

@@ -77,9 +77,10 @@ class SourcesSpec extends AnyFunSuite {
     // each reader's `f` against the expression its rule replaces, run over
     // spark.read.text's rows with the same arity filter; returns the count
     def same(path: String): Seq[Int] = Seq(
-      (9, TaxiText.readSegments(spark, path), split(regexp_replace(col("value"), "'", ""), ",", -1)),
-      (11, TaxiText.fields(spark, path, 11, Rule.Trips), split(col("value"), "\\s+", -1))
-    ).map { case (arity, got, old) =>
+      (Rule.Segments, TaxiText.readSegments(spark, path), split(regexp_replace(col("value"), "'", ""), ",", -1)),
+      (Rule.Trips, TaxiText.fields(spark, path, Rule.Trips), split(col("value"), "\\s+", -1))
+    ).map { case (rule, got, old) =>
+      val arity = rule.arity
       val want = hexes(spark.read.text(path).select(old.as("f")).filter(size(col("f")) === arity))
       val have = hexes(got)
       (0 to want.size).find(i => have.lift(i) != want.lift(i))
@@ -135,11 +136,13 @@ class SourcesSpec extends AnyFunSuite {
 
   test("taxi fixture dir resolves from inside the checkout and fails loudly outside it") {
     val root = Paths.get(dir).getParent.getParent.getParent.getParent
-    assert(TaxiQueries.fixtureDirFrom(root) == dir)
-    assert(TaxiQueries.fixtureDirFrom(root.resolve("src/main/scala/graft")) == dir)
+    assert(TaxiQueries.fixtureDirFrom(Seq(root)) == dir)
+    assert(TaxiQueries.fixtureDirFrom(Seq(root.resolve("src/main/scala/graft"))) == dir)
     val outside = Files.createTempDirectory("graft-nofixture")
     outside.toFile.deleteOnExit()
-    val e = intercept[java.io.FileNotFoundException](TaxiQueries.fixtureDirFrom(outside))
+    // a working directory outside any checkout: the code's own location finds it
+    assert(TaxiQueries.fixtureDirFrom(TaxiQueries.fixtureStarts(outside)) == dir)
+    val e = intercept[java.io.FileNotFoundException](TaxiQueries.fixtureDirFrom(Seq(outside)))
     assert(e.getMessage.contains(outside.toString))
   }
 
