@@ -90,10 +90,11 @@ object Bench {
     // self-adjudicates (r14 verdict: 4 rows drew 2-3.1x their local
     // bands through the 2-re-draw guard in the driver's contended env;
     // ceiling is now 4 with a GC-settle between draws).
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.rows.sortBy(_.name).map { row =>
+      val name = row.name
       def once(): Double = {
         val t0 = System.nanoTime()
-        BenchHarness.consume(fn(spark, sfDir))
+        BenchHarness.consume(row.run(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
       val (sec, breach) = try {

@@ -4,13 +4,12 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
-/** Ad-hoc per-query profiler: runs the named SparkEntry queries `reps`
+/** Ad-hoc per-query profiler: runs the named SparkEntry rows [[Reps]]
   * times each (same session config, warmup, and value-consuming evaluation
   * as [[Bench]], via [[BenchHarness]]) and prints every timing, so
   * regressions can be separated from JIT/ordering noise that a min-of-N
   * hides. Usage:
-  *   sbt "runMain graft.Profile q10_json_extract x9_text_langid" \
-  *     [-Dgraft.profile.reps=5]
+  *   sbt "runMain graft.Profile q10_json_extract x9_text_langid"
   * `--explain` prints each row's formatted physical plan instead;
   * `--stages` runs one cold pass over the named rows, then one
   * instrumented warm pass, and prints per row its slowest stages, the
@@ -20,6 +19,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
   */
 object Profile {
+
+  /** Timed runs per row in the default mode. */
+  private val Reps = 5
 
   /** `--stages` collector: per-stage wall, task time and shuffle bytes,
     * so a slow query's seconds can be attributed to specific operators
@@ -81,7 +83,6 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = sys.props.getOrElse("graft.profile.reps", "5").toInt
     // --explain: dump each query's formatted physical plan instead of
     // timing it — the plan-audit loop (pushdown reached the scan?
     // exchanges where expected? codegen spans wide?). An arg, not a
@@ -97,38 +98,35 @@ object Profile {
       "--no-ckpt is plan-audit only (it voids GlobalRank's frozen-block contract); pass --explain")
     val qArgs = args.toSeq.filterNot(a =>
       a == "--explain" || a == "--stages" || a == "--no-ckpt")
-    val names = if (qArgs.nonEmpty) qArgs else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty,
-      s"unknown queries: ${unknown.mkString(", ")}; valid: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
+    val rows = if (qArgs.nonEmpty) SparkEntry.select(qArgs) else SparkEntry.rows.sortBy(_.name)
 
     val spark = BenchHarness.session("graft-profile")
     BenchHarness.warmup(spark)
     if (noCkptFlag) spark.conf.set("spark.graft.ckpt.disable", "true")
-    def run(name: String): Unit = BenchHarness.consume(SparkEntry.queries(name)(spark, sfDir))
-    if (explainFlag) names.foreach { name =>
-      println(s"===== $name =====")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+    def run(row: SparkEntry.Row): Unit = BenchHarness.consume(row.run(spark, sfDir))
+    if (explainFlag) rows.foreach { row =>
+      println(s"===== ${row.name} =====")
+      row.run(spark, sfDir).explain("formatted")
     } else if (stagesFlag) {
       // a cold pass over EVERY named row, then one instrumented warm
       // pass: a warm row that recompiles shows the codegen cache losing
       // its kernels to the rows in between, and a warm schema-inference
       // job shows a Tables cache miss
-      val cold = names.map(n => measure(spark)(run(n)))
-      val warm = names.map(n => measure(spark)(run(n)))
-      names.lazyZip(cold).lazyZip(warm).foreach { (name, c, w) =>
-        println(f"===== $name: ${w.sec}%.3f s =====")
+      val cold = rows.map(r => measure(spark)(run(r)))
+      val warm = rows.map(r => measure(spark)(run(r)))
+      rows.lazyZip(cold).lazyZip(warm).foreach { (row, c, w) =>
+        println(f"===== ${row.name}: ${w.sec}%.3f s =====")
         println(s"[codegen] cold ${summary(Seq(c))}; warm ${summary(Seq(w))}")
         w.log.report()
       }
-      println(s"[codegen] ${names.size} rows: cold ${summary(cold)}; warm ${summary(warm)}")
-    } else names.foreach { name =>
-      val times = (1 to reps).map { _ =>
+      println(s"[codegen] ${rows.size} rows: cold ${summary(cold)}; warm ${summary(warm)}")
+    } else rows.foreach { row =>
+      val times = (1 to Reps).map { _ =>
         val t0 = System.nanoTime()
-        run(name)
+        run(row)
         (System.nanoTime() - t0) / 1e9
       }
-      println(f"[profile] $name%-24s ${times.map(t => f"$t%.3f").mkString(" ")}")
+      println(f"[profile] ${row.name}%-24s ${times.map(t => f"$t%.3f").mkString(" ")}")
     }
     spark.stop()
   }

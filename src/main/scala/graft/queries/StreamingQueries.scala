@@ -3,6 +3,8 @@ package graft.queries
 import graft.{CkptOps, Tables}
 import graft.streaming.{GapEvent, StreamingGapSessionize}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
@@ -197,19 +199,51 @@ object StreamingQueries {
 
   /** Spool `events` into `n` time-ranged parquet files (ranged on `tsCol`)
     * with strictly ascending mtimes, so a file-stream source replays them
-    * chronologically as one micro-batch each. Fail-fast mtime stamping —
-    * an un-stamped file could replay out of range order.
+    * chronologically as one micro-batch each. The ranges are `n` equal
+    * spans of [min, max] of `tsCol`, so the cut, and with it every
+    * batch's rows and watermark, depends only on the data (a sampled range
+    * partitioner drew new bounds on every run). An empty range still gets
+    * its (empty) file: always exactly `n` micro-batches. Fail-fast mtime
+    * stamping — an un-stamped file could replay out of range order.
     */
   private[graft] def spoolChronological(events: DataFrame, feedDir: String, n: Int,
                                  tsCol: String = "us"): Unit = {
-    events.repartitionByRange(n, col(tsCol))
+    val ts = col(tsCol).cast("double")
+    val bounds = events.agg(min(ts), max(ts)).head()
+    // range i goes to shuffle partition i, whose part file sorts i-th
+    val key = spoolKeys(n)
+    val range = if (bounds.isNullAt(0)) lit(key(0)) else {
+      val (lo, hi) = (bounds.getDouble(0), bounds.getDouble(1))
+      (1 until n).foldLeft(lit(key(0)))((r, i) =>
+        when(ts >= lo + (hi - lo) * i / n, key(i)).otherwise(r))
+    }
+    events.withColumn("_spool_key", range)
+      .repartition(n, col("_spool_key"))
       .sortWithinPartitions(tsCol)
+      .drop("_spool_key")
       .write.mode("overwrite").parquet(feedDir)
+    // Spark writes no file for an empty partition other than the first
+    val present = partFiles(feedDir).map(_.getFileName.toString.substring(5, 10).toInt).toSet
+    val missing = (0 until n).filterNot(present)
+    if (missing.nonEmpty) {
+      val empty = s"${feedDir}_empty"
+      events.limit(0).write.mode("overwrite").parquet(empty)
+      missing.foreach(i => Files.copy(partFiles(empty).head, Paths.get(feedDir, f"part-$i%05d-empty.parquet")))
+      deleteRecursively(Paths.get(empty))
+    }
     val base = System.currentTimeMillis() - 1000L * 3600
     partFiles(feedDir).zipWithIndex.foreach { case (p, i) =>
       require(p.toFile.setLastModified(base + i * 1000L),
         s"cannot stamp spool-file mtime on $p — chronological replay not guaranteed")
     }
+  }
+
+  /** For each i < n, an int key that hash partitioning into n parts sends
+    * to partition i (Spark's own partition-id expression, evaluated here).
+    */
+  private def spoolKeys(n: Int): IndexedSeq[Int] = {
+    def part(k: Int) = HashPartitioning(Seq(Literal(k)), n).partitionIdExpression.eval().asInstanceOf[Int]
+    (0 until n).map(i => Iterator.from(0).find(part(_) == i).get)
   }
 
   /** One replay's scratch: `spool` holds the feed, the checkpoint and any
@@ -643,8 +677,7 @@ object StreamingQueries {
     // guard is a 1-row aggregate broadcast-crossed into the spool input,
     // consumed through a FILTER (a plain dropped column would be pruned
     // and the `raise_error` never evaluated), so the check fires inside
-    // the spool write job: eager, loud, and no driver-side read — no
-    // spoolChronological caller reads anything on the driver anymore.
+    // the spool's own jobs: eager, loud, and no read by the caller.
     val guard = events
       .agg(count(lit(1)).as("n"), count_distinct(col("event_id")).as("d"))
       .select(when(col("n") =!= col("d"), raise_error(format_string(
@@ -755,7 +788,7 @@ object StreamingQueries {
     * this row closes the gap for the reference's actual flagship pipeline.
     *
     * Flush story: one E-status sentinel per taxi, one hour past the global
-    * max event time, spooled WITH the feed (range partitioning lands them
+    * max event time, spooled WITH the feed (as its latest events they land
     * in the last file). They advance the watermark and close open trips
     * through the FSM's normal gap transition (gap >> 210 s closes at the
     * PREVIOUS point; E opens nothing; emitted set identical to the batch

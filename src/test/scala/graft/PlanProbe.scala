@@ -8,8 +8,8 @@ object PlanProbe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSpec.spark
     val dir = "/root/testdata/sf0.001"
-    args.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
+    SparkEntry.select(args.toSeq).foreach { row =>
+      val (name, df) = (row.name, row.run(spark, dir))
       println(s"\n===== $name OPTIMIZED =====")
       println(df.queryExecution.optimizedPlan.toString.take(4000))
       println(s"===== $name PHYSICAL =====")

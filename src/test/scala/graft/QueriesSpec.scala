@@ -71,9 +71,14 @@ class QueriesSpec extends AnyFunSuite {
     assert(batch.getAs[Boolean]("all_pairs_verified"))
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracleSql without query impl: $extra")
+  test("registry names are unique and their Bench short keys distinct") {
+    val names = SparkEntry.rows.map(_.name)
+    assert(names.distinct == names, s"repeated names: ${names.diff(names.distinct)}")
+    // the driver's compact line keys rows by shortKey: a clash would merge two rows
+    val clashes = names.groupBy(Bench.shortKey).collect {
+      case (k, ns) if ns.size > 1 => s"$k <- ${ns.sorted.mkString(", ")}"
+    }
+    assert(clashes.isEmpty, s"shortKey clashes: ${clashes.mkString("; ")}")
   }
 
   test("every oracle SQL aliases every Spark output column by name") {

@@ -119,6 +119,36 @@ class StreamingHardeningSpec extends AnyFunSuite {
     }
   }
 
+  test("the spool cuts a feed into the same files every time: one per time range, in order, empty ranges included") {
+    import graft.queries.StreamingQueries.spoolChronological
+    val root = Files.createTempDirectory("graft_spool_cut")
+    /** Each spool file's rows, in file-name (= replay) order. */
+    def spool(feed: org.apache.spark.sql.DataFrame, name: String): Seq[Seq[(Long, Long)]] = {
+      val dir = root.resolve(name).toString
+      spoolChronological(feed, dir, 3)
+      val listing = Files.list(root.resolve(name))
+      val parts = try listing.sorted().toArray.map(_.toString).filter(_.contains("/part-"))
+        finally listing.close()
+      parts.toSeq.map(p => spark.read.parquet(p).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    }
+    try {
+      val sf = "/root/testdata/sf0.01"
+      val feed = Tables.load(spark, sf, "events")
+        .select(unix_micros(col("ts")).as("us"), col("event_id"))
+      val a = spool(feed, "a")
+      assert(a.size == 3 && a.forall(_.nonEmpty), a.map(_.size))
+      val b = spool(feed, "b")
+      if (b != a) fail(s"the same feed spooled twice gave different files: ${a.map(_.size)} then ${b.map(_.size)} rows")
+      assert(a.flatten.size == feed.count())
+      a.sliding(2).foreach { case Seq(x, y) => assert(x.map(_._1).max < y.map(_._1).min) }
+      // a gap wider than a third of the span leaves the middle range empty
+      import spark.implicits._
+      val gappy = spool(Seq((0L, 1L), (1L, 2L), (90L, 3L), (100L, 4L)).toDF("us", "event_id"), "gap")
+      assert(gappy == Seq(Seq((0L, 1L), (1L, 2L)), Seq(), Seq((90L, 3L), (100L, 4L))))
+      assert(spool(Seq.empty[(Long, Long)].toDF("us", "event_id"), "none") == Seq(Seq(), Seq(), Seq()))
+    } finally graft.sources.LayoutCache.deleteTree(root)
+  }
+
   test("spool-replay runner leaves no trace; its result still collects after teardown") {
     val Q = graft.queries.StreamingQueries
     for ((row, call) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
