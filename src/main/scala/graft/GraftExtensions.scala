@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session-extension entry point: makes the engine's custom expressions
-  * visible to plain SQL in any session built with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (or
-  * `.withExtensions(new GraftExtensions)`). The function list is the
-  * SAME one the temp-function registry uses
-  * ([[graft.functions.ArrayExpressions.functionBuilders]]) — one place
-  * to add an expression, both SQL surfaces get it.
+/** Session-extension entry point, and the only way the engine's custom
+  * SQL functions ([[graft.functions.ArrayExpressions.functionBuilders]])
+  * and its sessionize planner strategy reach a session: build it with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (as
+  * `BenchHarness.SessionConf` does for every session the library builds)
+  * or `.withExtensions(new GraftExtensions)`. Sessions cloned from such a
+  * session (`newSession()`, streaming) inherit both.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

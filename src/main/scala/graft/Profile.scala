@@ -24,9 +24,12 @@ object Profile {
   private val Reps = 5
 
   /** `--stages` collector: per-stage wall, task time and shuffle bytes,
-    * so a slow query's seconds can be attributed to specific operators
-    * (stage names carry the callsite), plus the count of schema-inference
-    * jobs ([[Tables]]' `parquet` call site). Guide §1: measure first.
+    * plus the count of schema-inference jobs ([[Tables]]' `parquet` call
+    * site). A stage's name is the call site Spark recorded for it; most
+    * stages that AQE submits are named
+    * `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:1768`,
+    * the frame of the asynchronous submission, not the engine's call site,
+    * so only the other stages can be attributed by name.
     */
   private final class StageLog extends org.apache.spark.scheduler.SparkListener {
     final case class Row(id: Int, name: String, wallMs: Long, taskMs: Long,

@@ -1,51 +1,98 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import scala.reflect.{ClassTag, classTag}
+
+import org.apache.spark.sql.{AnalysisException, Column}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions for the hot inner loops the built-in
   * higher-order functions (`aggregate`/`zip_with`/`array_intersect`)
-  * evaluate with per-element lambda dispatch and boxing. Both participate
-  * in whole-stage codegen via `doGenCode` — the generated code is a tight
-  * primitive loop over the unsafe array data.
+  * evaluate with per-element lambda dispatch and boxing. Each scalar
+  * kernel is one method, `compute`: interpreted `eval` calls it and so
+  * does the generated code ([[UnaryKernel]], [[BinaryKernel]]), so the two
+  * paths cannot drift and a stage holding a kernel stays in whole-stage
+  * codegen.
   *
-  * Column construction goes through the session function registry +
-  * `call_function` (the public Spark 4 route), so [[ArrayExpressions.register]]
-  * must run once per session before the wrappers are used; every query
-  * entry point in this library does that.
+  * The functions reach a session only through [[graft.GraftExtensions]],
+  * which injects [[functionBuilders]]; `BenchHarness.SessionConf` installs
+  * it in every session the library builds. The Column wrappers at the end
+  * resolve their function by name (`call_function`).
   */
 object ArrayExpressions {
 
-  private def checkArrayOf(elem: DataType, children: Seq[Expression], name: String): TypeCheckResult = {
-    val ok = children.forall(_.dataType match {
-      case ArrayType(`elem`, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
+  /** `actual` is `expected`; an array matches on its element type alone. */
+  private def accepts(expected: DataType, actual: DataType): Boolean = (expected, actual) match {
+    case (ArrayType(e, _), ArrayType(a, _)) => e == a
+    case _ => expected == actual
+  }
+
+  private def checkTypes(name: String, expected: Seq[DataType], args: Seq[Expression]): TypeCheckResult =
+    if (expected.corresponds(args)((t, a) => accepts(t, a.dataType))) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$name expects two array<$elem> arguments, got " +
-        children.map(_.dataType.simpleString).mkString(", "))
+      s"$name expects (${expected.map(_.simpleString).mkString(", ")}), got (" +
+        args.map(_.dataType.simpleString).mkString(", ") + ")")
+
+  /** The generated code of a kernel: one call of `compute` on the
+    * expression object itself. Where `compute` may return null (SQL NULL),
+    * its result goes through the boxed type and a null sets the null flag.
+    */
+  private def callCompute(ctx: CodegenContext, ev: ExprCode, kernel: Expression,
+                          returnsNull: Boolean, args: String): String = {
+    val self = ctx.addReferenceObj("kernel", kernel, kernel.getClass.getName)
+    if (!returnsNull) s"${ev.value} = $self.compute($args);"
+    else {
+      val r = ctx.freshName("r")
+      s"""${CodeGenerator.boxedType(kernel.dataType)} $r = $self.compute($args);
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }""".stripMargin
+    }
+  }
+
+  /** A function of one argument of SQL type `inputType`, whose physical
+    * value (`A`) goes to `compute`. `compute` returns null only where
+    * `returnsNull` says it may. (Serializable so that Java serialization
+    * of a kernel restores this class's fields instead of needing a no-arg
+    * constructor here.)
+    */
+  abstract class UnaryKernel[A](inputType: DataType) extends UnaryExpression with Serializable {
+    def compute(in: A): Any
+    protected def returnsNull: Boolean = false
+    override def nullable: Boolean = returnsNull || child.nullable
+    override def checkInputDataTypes(): TypeCheckResult =
+      checkTypes(prettyName, Seq(inputType), children)
+    override def nullSafeEval(in: Any): Any = compute(in.asInstanceOf[A])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, c => callCompute(ctx, ev, this, returnsNull, c))
+  }
+
+  /** [[UnaryKernel]] for two arguments. */
+  abstract class BinaryKernel[A, B](leftType: DataType, rightType: DataType)
+      extends BinaryExpression with Serializable {
+    def compute(a: A, b: B): Any
+    protected def returnsNull: Boolean = false
+    override def nullable: Boolean = returnsNull || left.nullable || right.nullable
+    override def checkInputDataTypes(): TypeCheckResult =
+      checkTypes(prettyName, Seq(leftType, rightType), children)
+    override def nullSafeEval(a: Any, b: Any): Any = compute(a.asInstanceOf[A], b.asInstanceOf[B])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) => callCompute(ctx, ev, this, returnsNull, s"$a, $b"))
   }
 
   /** |a ∩ b| for two SORTED long arrays (merge walk, no hashing, no
     * boxing). Used by the Jaccard dedup operators on hashed shingle sets.
     */
   case class SortedLongIntersectCount(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData](ArrayType(LongType), ArrayType(LongType)) {
     override def dataType: DataType = IntegerType
     override def prettyName: String = "sorted_long_intersect_count"
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayOf(LongType, children, prettyName)
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    def compute(x: ArrayData, y: ArrayData): Int = {
       var i = 0; var j = 0; var n = 0
       val nx = x.numElements(); val ny = y.numElements()
       while (i < nx && j < ny) {
@@ -56,21 +103,6 @@ object ArrayExpressions {
       }
       n
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i"); val j = ctx.freshName("j")
-        val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-        s"""
-           |int $i = 0; int $j = 0;
-           |${ev.value} = 0;
-           |while ($i < $a.numElements() && $j < $b.numElements()) {
-           |  long $xv = $a.getLong($i); long $yv = $b.getLong($j);
-           |  if ($xv == $yv) { ${ev.value}++; $i++; $j++; }
-           |  else if ($xv < $yv) { $i++; } else { $j++; }
-           |}
-         """.stripMargin
-      })
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
@@ -86,15 +118,11 @@ object ArrayExpressions {
     * set-valued inputs.
     */
   case class SortedLongIntersect(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData](ArrayType(LongType), ArrayType(LongType)) {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "sorted_long_intersect"
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayOf(LongType, children, prettyName)
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    def compute(x: ArrayData, y: ArrayData): ArrayData = {
       val nx = x.numElements(); val ny = y.numElements()
       val out = new Array[Long](math.min(nx, ny))
       var i = 0; var j = 0; var n = 0
@@ -104,27 +132,8 @@ object ArrayExpressions {
         else if (xv < yv) i += 1
         else j += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        java.util.Arrays.copyOf(out, n))
+      new GenericArrayData(java.util.Arrays.copyOf(out, n))
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i"); val j = ctx.freshName("j")
-        val n = ctx.freshName("n"); val buf = ctx.freshName("buf")
-        val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-        s"""
-           |int $i = 0; int $j = 0; int $n = 0;
-           |long[] $buf = new long[Math.min($a.numElements(), $b.numElements())];
-           |while ($i < $a.numElements() && $j < $b.numElements()) {
-           |  long $xv = $a.getLong($i); long $yv = $b.getLong($j);
-           |  if ($xv == $yv) { $buf[$n++] = $xv; $i++; $j++; }
-           |  else if ($xv < $yv) { $i++; } else { $j++; }
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-           |  java.util.Arrays.copyOf($buf, $n));
-         """.stripMargin
-      })
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
@@ -147,16 +156,12 @@ object ArrayExpressions {
     * visible NULL, never a silently truncated distance.
     */
   case class FixedPointDist2(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData](ArrayType(DoubleType), ArrayType(DoubleType)) {
     override def dataType: DataType = LongType
-    override def nullable: Boolean = true
+    override protected def returnsNull: Boolean = true
     override def prettyName: String = "fixed_point_dist2"
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayOf(DoubleType, children, prettyName)
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    def compute(x: ArrayData, y: ArrayData): java.lang.Long = {
       val n = x.numElements()
       if (y.numElements() != n) return null
       var s = 0.0
@@ -166,27 +171,8 @@ object ArrayExpressions {
         s += d * d
         i += 1
       }
-      s.toLong
+      java.lang.Long.valueOf(s.toLong)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i"); val n = ctx.freshName("n")
-        val s = ctx.freshName("s"); val d = ctx.freshName("d")
-        s"""
-           |int $n = $a.numElements();
-           |if ($b.numElements() != $n) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  double $s = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    double $d = $a.getDouble($i) - $b.getDouble($i);
-           |    $s += $d * $d;
-           |  }
-           |  ${ev.value} = (long) $s;
-           |}
-         """.stripMargin
-      })
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
@@ -197,15 +183,11 @@ object ArrayExpressions {
     * mathematical definition's 0/0.
     */
   case class CosineSimilarity(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData](ArrayType(DoubleType), ArrayType(DoubleType)) {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "cosine_similarity"
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayOf(DoubleType, children, prettyName)
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    def compute(x: ArrayData, y: ArrayData): Double = {
       val n = math.min(x.numElements(), y.numElements())
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
@@ -216,22 +198,6 @@ object ArrayExpressions {
       }
       dot / (math.sqrt(na) * math.sqrt(nb))
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i"); val n = ctx.freshName("n")
-        val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-        val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $xv = $a.getDouble($i); double $yv = $b.getDouble($i);
-           |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-           |}
-           |${ev.value} = $dot / (Math.sqrt($na) * Math.sqrt($nb));
-         """.stripMargin
-      })
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
@@ -244,18 +210,16 @@ object ArrayExpressions {
     * (interpreted lambda per element per perm) with a fused primitive loop.
     */
   case class MinHashSignature(child: Expression, numPerms: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[ArrayData](ArrayType(LongType)) {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "minhash_signature"
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayOf(LongType, children, prettyName)
 
-    private val p = MinHash.P
     private lazy val coefA: Array[Long] = Array.tabulate(numPerms)(MinHash.coefA)
     private lazy val coefB: Array[Long] = Array.tabulate(numPerms)(MinHash.coefB)
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
+    def compute(arr: ArrayData): ArrayData = {
+      val p = MinHash.P
+      val a = coefA; val b = coefB
       val out = Array.fill(numPerms)(Long.MaxValue)
       var i = 0
       val n = arr.numElements()
@@ -263,34 +227,13 @@ object ArrayExpressions {
         val h = { val m = arr.getLong(i) % p; if (m < 0) m + p else m }
         var j = 0
         while (j < numPerms) {
-          val v = (coefA(j) * h + coefB(j)) % p
+          val v = (a(j) * h + b(j)) % p
           if (v < out(j)) out(j) = v
           j += 1
         }
         i += 1
       }
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val aRef = ctx.addReferenceObj("coefA", coefA, "long[]")
-      val bRef = ctx.addReferenceObj("coefB", coefB, "long[]")
-      nullSafeCodeGen(ctx, ev, c => {
-        val out = ctx.freshName("out"); val i = ctx.freshName("i")
-        val j = ctx.freshName("j"); val h = ctx.freshName("h"); val v = ctx.freshName("v")
-        s"""
-           |long[] $out = new long[$numPerms];
-           |java.util.Arrays.fill($out, Long.MAX_VALUE);
-           |for (int $i = 0; $i < $c.numElements(); $i++) {
-           |  long $h = $c.getLong($i) % ${p}L; if ($h < 0) $h += ${p}L;
-           |  for (int $j = 0; $j < $numPerms; $j++) {
-           |    long $v = ($aRef[$j] * $h + $bRef[$j]) % ${p}L;
-           |    if ($v < $out[$j]) $out[$j] = $v;
-           |  }
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         """.stripMargin
-      })
+      ArrayData.toArrayData(out)
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -322,19 +265,12 @@ object ArrayExpressions {
     * string-list computation by construction.
     */
   case class ShingleHashesSorted(child: Expression, n: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[UTF8String](StringType) {
     require(n >= 1 && n <= 3, s"shingle_hashes_sorted supports 1 <= n <= 3, got $n")
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "shingle_hashes_sorted"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a string argument, got ${other.simpleString}")
-      }
 
-    /** JVM-side kernel; also the target of the generated code. */
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(s: UTF8String): ArrayData = {
       val cps = s.toString.codePoints().toArray
       val m = cps.length - n + 1
       if (m <= 0) return ArrayData.toArrayData(Array.emptyLongArray)
@@ -360,17 +296,6 @@ object ArrayExpressions {
       ArrayData.toArrayData(java.util.Arrays.copyOf(out, w))
     }
 
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      // The kernel does real per-row work (hash + sort of ~len longs), so
-      // generated code just calls it — keeps the stage inside whole-stage
-      // codegen without inlining the loop.
-      val self = ctx.addReferenceObj("shingler", this, classOf[ShingleHashesSorted].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -382,15 +307,9 @@ object ArrayExpressions {
     * interpreted lambda dispatch.
     */
   case class SimHash64(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[ArrayData](ArrayType(StringType)) {
     override def dataType: DataType = LongType
     override def prettyName: String = "simhash64"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects array<string>, got ${other.simpleString}")
-      }
 
     def compute(arr: ArrayData): Long = {
       val counts = new Array[Int](64)
@@ -423,13 +342,6 @@ object ArrayExpressions {
       fp
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("simhasher", this, classOf[SimHash64].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -444,15 +356,9 @@ object ArrayExpressions {
     * luminance plane and nothing else changes. Empty payload → 0L.
     */
   case class AHash64(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[Array[Byte]](BinaryType) {
     override def dataType: DataType = LongType
     override def prettyName: String = "ahash64"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects binary, got ${other.simpleString}")
-      }
 
     def compute(bytes: Array[Byte]): Long = {
       val n = bytes.length
@@ -475,13 +381,6 @@ object ArrayExpressions {
       fp
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("ahasher", this, classOf[AHash64].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -501,12 +400,10 @@ object ArrayExpressions {
     * add `size(v) = dim` to their join/filter.
     */
   case class HyperplaneBucket(child: Expression, nBits: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[ArrayData](ArrayType(DoubleType)) {
     require(nBits >= 1 && nBits <= 64, s"hyperplane_bucket needs 1 <= nBits <= 64, got $nBits")
     override def dataType: DataType = LongType
     override def prettyName: String = "hyperplane_bucket"
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayOf(DoubleType, children, prettyName)
 
     def compute(v: ArrayData): Long = {
       val n = v.numElements()
@@ -532,13 +429,6 @@ object ArrayExpressions {
       bucket
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("hyperplaner", this, classOf[HyperplaneBucket].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -551,18 +441,12 @@ object ArrayExpressions {
     * plus interpreted HOF lambda dispatch per token per lexicon.
     */
   case class LexiconHits(child: Expression, lexicons: Seq[Seq[String]])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[UTF8String](StringType) {
     // the word->lexicon map packs lexicon membership into an Int bitmask;
     // index 32 would alias index 0 (Java shifts are mod 32)
     require(lexicons.length <= 32, s"lexicon_hits supports at most 32 lexicons, got ${lexicons.length}")
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "lexicon_hits"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a string argument, got ${other.simpleString}")
-      }
 
     // word -> bitmask of lexicon indices containing it (a word may appear
     // in several lexicons, e.g. "la"/"que" in both es and fr)
@@ -580,7 +464,7 @@ object ArrayExpressions {
     private def isWs(c: Char): Boolean = // Java regex \s: [ \t\n\x0B\f\r]
       c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(s: UTF8String): ArrayData = {
       val counts = new Array[Int](lexicons.length)
       val str = s.toString
       val n = str.length
@@ -604,14 +488,6 @@ object ArrayExpressions {
       ArrayData.toArrayData(counts)
     }
 
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("lexicons", this, classOf[LexiconHits].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -629,16 +505,10 @@ object ArrayExpressions {
     * characters.
     */
   case class DocFingerprint(child: Expression, n: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[UTF8String](StringType) {
     require(n >= 1, s"doc_fingerprint needs n >= 1, got $n")
     override def dataType: DataType = StringType
     override def prettyName: String = "doc_fingerprint"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a string argument, got ${other.simpleString}")
-      }
 
     private def codePointCompare(a: String, b: String): Int = {
       var i = 0; var j = 0
@@ -650,7 +520,7 @@ object ArrayExpressions {
       Integer.compare(a.length - i, b.length - j)
     }
 
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
+    def compute(s: UTF8String): UTF8String = {
       val str = s.toString
       val cps = str.codePoints().toArray
       val m = cps.length - n + 1
@@ -666,15 +536,7 @@ object ArrayExpressions {
       val digest = md.digest()
       val hex = new StringBuilder(32)
       digest.foreach(b => hex.append(f"${b & 0xff}%02x"))
-      org.apache.spark.unsafe.types.UTF8String.fromString(hex.toString)
-    }
-
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("fingerprinter", this, classOf[DocFingerprint].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
+      UTF8String.fromString(hex.toString)
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -696,24 +558,18 @@ object ArrayExpressions {
     * mix64 finalizer.
     */
   case class CdcChunks(child: Expression, minSize: Int, avgBits: Int, maxSize: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[UTF8String](StringType) {
     require(minSize >= 1 && avgBits >= 1 && avgBits <= 28 && maxSize >= minSize,
       s"cdc_chunks: need 1 <= minSize <= maxSize and 1 <= avgBits <= 28")
     override def dataType: DataType = ArrayType(
       StructType(Seq(StructField("len", IntegerType, nullable = false),
         StructField("hash", LongType, nullable = false))), containsNull = false)
     override def prettyName: String = "cdc_chunks"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a string argument, got ${other.simpleString}")
-      }
 
     // boundary iff the top avgBits bits of the rolling hash are zero
     private val shift: Int = 64 - avgBits
 
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(s: UTF8String): ArrayData = {
       val bytes = s.getBytes
       val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       var start = 0
@@ -732,15 +588,7 @@ object ArrayExpressions {
         }
       }
       if (i > start) out += InternalRow(i - start, mix64(fnv))
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray[Any])
-    }
-
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("chunker", this, classOf[CdcChunks].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
+      new GenericArrayData(out.toArray[Any])
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -759,17 +607,11 @@ object ArrayExpressions {
     * kernel ~100 MB/s/core; deterministic for a given JVM's zlib.
     */
   case class DeflateRatio(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[UTF8String](StringType) {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "deflate_ratio"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a string argument, got ${other.simpleString}")
-      }
 
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): Double = {
+    def compute(s: UTF8String): Double = {
       val bytes = s.getBytes
       if (bytes.isEmpty) return 1.0
       // one native zlib stream per executor thread, reset per row —
@@ -783,14 +625,6 @@ object ArrayExpressions {
       var total = 0L
       while (!d.finished()) total += d.deflate(buf)
       total.toDouble / bytes.length
-    }
-
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("deflater", this, classOf[DeflateRatio].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -816,17 +650,11 @@ object ArrayExpressions {
     * per-row kernel — one pass over the scan, zero exchanges.
     */
   case class CharDiversity(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[UTF8String](StringType) {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "char_diversity"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a string argument, got ${other.simpleString}")
-      }
 
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(s: UTF8String): ArrayData = {
       val str = s.toString
       val counts = new java.util.HashMap[Integer, Array[Long]]()
       var n = 0L
@@ -850,14 +678,6 @@ object ArrayExpressions {
       ArrayData.toArrayData(Array(n, counts.size().toLong, maxc, sumSq))
     }
 
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("charDiversity", this, classOf[CharDiversity].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -869,34 +689,20 @@ object ArrayExpressions {
     * different bytes, so un-normalized corpora silently miss duplicates.
     */
   case class UnicodeNormalize(child: Expression, form: String)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[UTF8String](StringType) {
     require(Seq("NFC", "NFD", "NFKC", "NFKD").contains(form),
       s"unicode_normalize form must be one of NFC/NFD/NFKC/NFKD, got $form")
     @transient private lazy val normForm = java.text.Normalizer.Form.valueOf(form)
     override def dataType: DataType = StringType
     override def prettyName: String = "unicode_normalize"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a string argument, got ${other.simpleString}")
-      }
 
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
+    def compute(s: UTF8String): UTF8String = {
       val str = s.toString
       // fast path: Normalizer.isNormalized is a cheap scan, and real
       // corpora are overwhelmingly already-NFC — skip the rewrite
       if (java.text.Normalizer.isNormalized(str, normForm)) s
-      else org.apache.spark.unsafe.types.UTF8String.fromString(
+      else UTF8String.fromString(
         java.text.Normalizer.normalize(str, normForm))
-    }
-
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("normalizer", this, classOf[UnicodeNormalize].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -907,17 +713,11 @@ object ArrayExpressions {
     * search/dedup pipelines run before comparing text across sources.
     */
   case class StripAccents(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[UTF8String](StringType) {
     override def dataType: DataType = StringType
     override def prettyName: String = "strip_accents"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a string argument, got ${other.simpleString}")
-      }
 
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
+    def compute(s: UTF8String): UTF8String = {
       val nfd = java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFD)
       val sb = new java.lang.StringBuilder(nfd.length)
       var i = 0
@@ -926,16 +726,8 @@ object ArrayExpressions {
         if (Character.getType(cp) != Character.NON_SPACING_MARK) sb.appendCodePoint(cp)
         i += Character.charCount(cp)
       }
-      org.apache.spark.unsafe.types.UTF8String.fromString(
+      UTF8String.fromString(
         java.text.Normalizer.normalize(sb, java.text.Normalizer.Form.NFC))
-    }
-
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("stripper", this, classOf[StripAccents].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -956,57 +748,37 @@ object ArrayExpressions {
     * walk ends at the SOF, bytes after it are irrelevant.
     */
   case class JpegSofDim(child: Expression, isWidth: Boolean)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[Array[Byte]](BinaryType) {
     override def dataType: DataType = LongType
-    override def nullable: Boolean = true
+    override protected def returnsNull: Boolean = true
     override def prettyName: String = if (isWidth) "jpeg_width" else "jpeg_height"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a binary argument, got ${other.simpleString}")
-      }
 
-    /** The walk; -1 encodes SQL NULL (dimensions are u16, never negative). */
-    def compute(b: Array[Byte]): Long = {
+    def compute(b: Array[Byte]): java.lang.Long = {
       val n = b.length
       @inline def u8(i: Int): Int = b(i) & 0xFF
-      if (n < 4 || u8(0) != 0xFF || u8(1) != 0xD8) return -1L
+      if (n < 4 || u8(0) != 0xFF || u8(1) != 0xD8) return null
       var pos = 2
       while (pos + 1 < n) {
-        if (u8(pos) != 0xFF) return -1L // lost sync: not a marker boundary
+        if (u8(pos) != 0xFF) return null // lost sync: not a marker boundary
         // fill bytes: any number of 0xFF may pad before the marker code
         var m = u8(pos + 1)
         while (m == 0xFF && pos + 2 < n) { pos += 1; m = u8(pos + 1) }
-        if (m == 0xFF) return -1L // truncated inside padding
+        if (m == 0xFF) return null // truncated inside padding
         if (m == 0x01 || (m >= 0xD0 && m <= 0xD7) || m == 0xD8) pos += 2 // standalone
-        else if (m == 0xD9 || m == 0xDA) return -1L // EOI/SOS before any SOF
+        else if (m == 0xD9 || m == 0xDA) return null // EOI/SOS before any SOF
         else {
-          if (pos + 3 >= n) return -1L
+          if (pos + 3 >= n) return null
           val segLen = (u8(pos + 2) << 8) | u8(pos + 3)
-          if (segLen < 2) return -1L
+          if (segLen < 2) return null
           if (m >= 0xC0 && m <= 0xCF && m != 0xC4 && m != 0xC8 && m != 0xCC) {
-            if (segLen < 7 || pos + 8 >= n) return -1L // SOF too short for dims
-            return if (isWidth) ((u8(pos + 7) << 8) | u8(pos + 8)).toLong
-            else ((u8(pos + 5) << 8) | u8(pos + 6)).toLong
+            if (segLen < 7 || pos + 8 >= n) return null // SOF too short for dims
+            return java.lang.Long.valueOf(
+              if (isWidth) (u8(pos + 7) << 8) | u8(pos + 8) else (u8(pos + 5) << 8) | u8(pos + 6))
           }
           pos += 2 + segLen
         }
       }
-      -1L
-    }
-
-    override def nullSafeEval(input: Any): Any = {
-      val r = compute(input.asInstanceOf[Array[Byte]])
-      if (r < 0L) null else java.lang.Long.valueOf(r)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("jpegSof", this, classOf[JpegSofDim].getName)
-      nullSafeCodeGen(ctx, ev, c => s"""
-        long r = $self.compute($c);
-        if (r < 0L) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-      """)
+      null
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -1025,49 +797,28 @@ object ArrayExpressions {
     * cheaper than re-parsing the ~1 MB counter table per row).
     */
   case class CmsEstimate(sketch: Expression, item: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+      extends BinaryKernel[Array[Byte], UTF8String](BinaryType, StringType) {
     override def left: Expression = sketch
     override def right: Expression = item
     override def dataType: DataType = LongType
     // NULL on bytes that are not a serialized sketch (never a throw) —
     // the same wrong-format-safe posture as the media parsers
-    override def nullable: Boolean = true
+    override protected def returnsNull: Boolean = true
     override def prettyName: String = "cms_estimate"
-    override def checkInputDataTypes(): TypeCheckResult =
-      (sketch.dataType, item.dataType) match {
-        case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (binary sketch, string item), got $other")
-      }
 
     @transient private var memoBytes: Array[Byte] = _
     @transient private var memoSketch: org.apache.spark.util.sketch.CountMinSketch = _
 
-    /** -1 encodes SQL NULL (a real estimate is a count, never negative). */
-    def compute(bytes: Array[Byte], tok: org.apache.spark.unsafe.types.UTF8String): Long = {
+    def compute(bytes: Array[Byte], tok: UTF8String): java.lang.Long = {
       if (memoSketch == null || !java.util.Arrays.equals(memoBytes, bytes)) {
         memoSketch =
           try org.apache.spark.util.sketch.CountMinSketch.readFrom(
             new java.io.ByteArrayInputStream(bytes))
           catch { case _: java.io.IOException | _: RuntimeException => null }
         memoBytes = bytes
-        if (memoSketch == null) return -1L
+        if (memoSketch == null) return null
       }
-      memoSketch.estimateCount(tok.getBytes)
-    }
-
-    override def nullSafeEval(sk: Any, it: Any): Any = {
-      val r = compute(sk.asInstanceOf[Array[Byte]],
-        it.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-      if (r < 0L) null else java.lang.Long.valueOf(r)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("cmsEstimate", this, classOf[CmsEstimate].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"""
-        long r = $self.compute($a, $b);
-        if (r < 0L) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-      """)
+      java.lang.Long.valueOf(memoSketch.estimateCount(tok.getBytes))
     }
 
     override protected def withNewChildrenInternal(
@@ -1089,16 +840,10 @@ object ArrayExpressions {
     * `fmt `/`data` chunk, or non-16-bit-PCM encodings.
     */
   case class WavPcmStats(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[Array[Byte]](BinaryType) {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = true
+    override protected def returnsNull: Boolean = true
     override def prettyName: String = "wav_pcm_stats"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a binary argument, got ${other.simpleString}")
-      }
 
     def compute(b: Array[Byte]): ArrayData = {
       val n = b.length
@@ -1142,16 +887,6 @@ object ArrayExpressions {
       null
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("wavPcm", this, classOf[WavPcmStats].getName)
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = $self.compute($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -1171,16 +906,10 @@ object ArrayExpressions {
     * entropy data, or trailing garbage after the last EOI.
     */
   case class MjpegStats(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+      extends UnaryKernel[Array[Byte]](BinaryType) {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = true
+    override protected def returnsNull: Boolean = true
     override def prettyName: String = "mjpeg_stats"
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a binary argument, got ${other.simpleString}")
-      }
 
     def compute(b: Array[Byte]): ArrayData = {
       val n = b.length
@@ -1238,133 +967,103 @@ object ArrayExpressions {
       else ArrayData.toArrayData(Array(frames, fw, fh, lw, lh))
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val self = ctx.addReferenceObj("mjpeg", this, classOf[MjpegStats].getName)
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = $self.compute($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
   /** Shared deterministic coefficient scheme for MinHash permutations. */
   object MinHash {
     /** 2^31−1 (Mersenne prime): a·h+b stays within Long under ANSI. */
-    val P = 2147483647L
+    final val P = 2147483647L
     private def mix(seed: Long, i: Int): Long =
       math.abs(mix64(seed + 0x9E3779B97F4A7C15L * (i + 1))) % (P - 1) + 1
     def coefA(i: Int): Long = mix(42L, i)
     def coefB(i: Int): Long = mix(4242L, i)
   }
 
-  /** Idempotently register the functions in THIS session's registry (temp
-    * functions — session-scoped, no catalog pollution). Query builders
-    * invoke this on every construction; short-circuits per session.
+  /** The arguments of one SQL call, as its builder sees them at analysis.
+    * A literal parameter given a column reference or a NULL fails with
+    * Spark's standard error, as a misused built-in does.
     */
-  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+  final class Args private[ArrayExpressions] (funcName: String, es: Seq[Expression]) {
+    def apply(i: Int): Expression = es(i)
+    def int(i: Int, param: String): Int = literal(i, param, "INT").asInstanceOf[Number].intValue()
+    def string(i: Int, param: String): String = literal(i, param, "STRING").toString
 
-  private def strArg(e: Expression, funcName: String, paramName: String): String = {
-    // fail at analysis with Spark's standard readable errors, not an
-    // opaque eval NPE/ClassCastException from a column ref or NULL
-    if (!e.foldable)
-      throw new org.apache.spark.sql.AnalysisException(
-        "NON_FOLDABLE_ARGUMENT",
-        Map("funcName" -> ("`" + funcName + "`"), "paramName" -> ("`" + paramName + "`"),
-          "paramType" -> "\"STRING\""))
-    val v = e.eval()
-    if (v == null)
-      throw new org.apache.spark.sql.AnalysisException(
-        "INVALID_PARAMETER_VALUE.NULL",
-        Map("parameter" -> ("`" + paramName + "`"), "functionName" -> ("`" + funcName + "`")))
-    v.toString
-  }
-
-  /** The ONE list of (name, implementing class, builder) triples — both
-    * registration paths ([[register]] temp functions and
-    * [[graft.GraftExtensions]] injection) consume it, so a new expression
-    * added here is automatically visible on both surfaces (the two paths
-    * had already drifted apart once when they were maintained by hand).
-    *
-    * Every builder validates its arity up front and raises Spark's
-    * standard WRONG_NUM_ARGS analysis error — a wrong-arity SQL call
-    * (`minhash_signature(x)`, `lexicon_hits(x, extra)`) must fail like a
-    * misused built-in, not with an IndexOutOfBounds from inside the
-    * builder or by silently ignoring extra arguments.
-    */
-  private def entry(name: String, clazz: String, arity: Int)(
-      build: Seq[Expression] => Expression): (String, String, Seq[Expression] => Expression) =
-    (name, clazz, es => {
-      if (es.length != arity)
-        throw new org.apache.spark.sql.AnalysisException(
-          "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          Map(
-            "functionName" -> ("`" + name + "`"),
-            "expectedNum" -> arity.toString,
-            "actualNum" -> es.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      build(es)
-    })
-
-  val functionBuilders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    entry("sorted_long_intersect_count", classOf[SortedLongIntersectCount].getName, 2)(
-      es => SortedLongIntersectCount(es.head, es(1))),
-    entry("sorted_long_intersect", classOf[SortedLongIntersect].getName, 2)(
-      es => SortedLongIntersect(es.head, es(1))),
-    entry("cosine_similarity", classOf[CosineSimilarity].getName, 2)(
-      es => CosineSimilarity(es.head, es(1))),
-    entry("fixed_point_dist2", classOf[FixedPointDist2].getName, 2)(
-      es => FixedPointDist2(es.head, es(1))),
-    entry("minhash_signature", classOf[MinHashSignature].getName, 2)(
-      es => MinHashSignature(es.head, intArg(es(1)))),
-    entry("shingle_hashes_sorted", classOf[ShingleHashesSorted].getName, 2)(
-      es => ShingleHashesSorted(es.head, intArg(es(1)))),
-    entry("top_k_by_score", classOf[TopKByScore].getName, 3)(
-      es => TopKByScore(es.head, es(1), intArg(es(2)))),
-    entry("deflate_ratio", classOf[DeflateRatio].getName, 1)(es => DeflateRatio(es.head)),
-    entry("simhash64", classOf[SimHash64].getName, 1)(es => SimHash64(es.head)),
-    entry("ahash64", classOf[AHash64].getName, 1)(es => AHash64(es.head)),
-    entry("hyperplane_bucket", classOf[HyperplaneBucket].getName, 2)(
-      es => HyperplaneBucket(es.head, intArg(es(1)))),
-    entry("vector_sum", classOf[VectorSum].getName, 1)(es => VectorSum(es.head)),
-    entry("cdc_chunks", classOf[CdcChunks].getName, 4)(
-      es => CdcChunks(es.head, intArg(es(1)), intArg(es(2)), intArg(es(3)))),
-    entry("doc_fingerprint", classOf[DocFingerprint].getName, 2)(
-      es => DocFingerprint(es.head, intArg(es(1)))),
-    entry("lexicon_hits", classOf[LexiconHits].getName, 1)(
-      es => LexiconHits(es.head,
-        graft.operators.TextAnalysis.LexiconOrder.map(
-          graft.operators.TextAnalysis.Lexicons))),
-    entry("char_diversity", classOf[CharDiversity].getName, 1)(
-      es => CharDiversity(es.head)),
-    entry("unicode_normalize", classOf[UnicodeNormalize].getName, 2)(
-      es => UnicodeNormalize(es.head, strArg(es(1), "unicode_normalize", "form"))),
-    entry("strip_accents", classOf[StripAccents].getName, 1)(
-      es => StripAccents(es.head)),
-    entry("jpeg_width", classOf[JpegSofDim].getName, 1)(
-      es => JpegSofDim(es.head, isWidth = true)),
-    entry("jpeg_height", classOf[JpegSofDim].getName, 1)(
-      es => JpegSofDim(es.head, isWidth = false)),
-    entry("cms_estimate", classOf[CmsEstimate].getName, 2)(
-      es => CmsEstimate(es.head, es(1))),
-    entry("wav_pcm_stats", classOf[WavPcmStats].getName, 1)(
-      es => WavPcmStats(es.head)),
-    entry("mjpeg_stats", classOf[MjpegStats].getName, 1)(
-      es => MjpegStats(es.head)))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (registry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_signature"))) return
-    functionBuilders.foreach { case (name, _, builder) =>
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
+    private def literal(i: Int, param: String, paramType: String): Any = {
+      val e = es(i)
+      if (!e.foldable)
+        throw new AnalysisException("NON_FOLDABLE_ARGUMENT",
+          Map("funcName" -> s"`$funcName`", "paramName" -> s"`$param`",
+            "paramType" -> s""""$paramType""""))
+      val v = e.eval()
+      if (v == null)
+        throw new AnalysisException("INVALID_PARAMETER_VALUE.NULL",
+          Map("parameter" -> s"`$param`", "functionName" -> s"`$funcName`"))
+      v
     }
   }
 
-  /** Column wrappers (require [[register]] on the active session). */
+  /** One (name, implementing class, builder) triple of [[functionBuilders]].
+    * The builder checks the arity first and raises Spark's standard
+    * WRONG_NUM_ARGS analysis error: a wrong-arity SQL call
+    * (`minhash_signature(x)`, `lexicon_hits(x, extra)`) fails like a
+    * misused built-in, not with an IndexOutOfBounds from inside the
+    * builder or by silently ignoring extra arguments.
+    */
+  private def entry[E <: Expression: ClassTag](name: String, arity: Int)(
+      build: Args => Expression): (String, String, Seq[Expression] => Expression) =
+    (name, classTag[E].runtimeClass.getName, es => {
+      if (es.length != arity)
+        throw new AnalysisException(
+          "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+          Map(
+            "functionName" -> s"`$name`",
+            "expectedNum" -> arity.toString,
+            "actualNum" -> es.length.toString,
+            "docroot" -> "https://spark.apache.org/docs/latest"))
+      build(new Args(name, es))
+    })
+
+  /** Every custom SQL function, the one list [[graft.GraftExtensions]]
+    * injects into each session.
+    */
+  val functionBuilders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    entry[SortedLongIntersectCount]("sorted_long_intersect_count", 2)(
+      a => SortedLongIntersectCount(a(0), a(1))),
+    entry[SortedLongIntersect]("sorted_long_intersect", 2)(a => SortedLongIntersect(a(0), a(1))),
+    entry[CosineSimilarity]("cosine_similarity", 2)(a => CosineSimilarity(a(0), a(1))),
+    entry[FixedPointDist2]("fixed_point_dist2", 2)(a => FixedPointDist2(a(0), a(1))),
+    entry[MinHashSignature]("minhash_signature", 2)(
+      a => MinHashSignature(a(0), a.int(1, "numPerms"))),
+    entry[ShingleHashesSorted]("shingle_hashes_sorted", 2)(
+      a => ShingleHashesSorted(a(0), a.int(1, "n"))),
+    entry[TopKByScore]("top_k_by_score", 3)(a => TopKByScore(a(0), a(1), a.int(2, "k"))),
+    entry[DeflateRatio]("deflate_ratio", 1)(a => DeflateRatio(a(0))),
+    entry[SimHash64]("simhash64", 1)(a => SimHash64(a(0))),
+    entry[AHash64]("ahash64", 1)(a => AHash64(a(0))),
+    entry[HyperplaneBucket]("hyperplane_bucket", 2)(
+      a => HyperplaneBucket(a(0), a.int(1, "nBits"))),
+    entry[VectorSum]("vector_sum", 1)(a => VectorSum(a(0))),
+    entry[CdcChunks]("cdc_chunks", 4)(
+      a => CdcChunks(a(0), a.int(1, "minSize"), a.int(2, "avgBits"), a.int(3, "maxSize"))),
+    entry[DocFingerprint]("doc_fingerprint", 2)(a => DocFingerprint(a(0), a.int(1, "n"))),
+    entry[LexiconHits]("lexicon_hits", 1)(
+      a => LexiconHits(a(0),
+        graft.operators.TextAnalysis.LexiconOrder.map(
+          graft.operators.TextAnalysis.Lexicons))),
+    entry[CharDiversity]("char_diversity", 1)(a => CharDiversity(a(0))),
+    entry[UnicodeNormalize]("unicode_normalize", 2)(
+      a => UnicodeNormalize(a(0), a.string(1, "form"))),
+    entry[StripAccents]("strip_accents", 1)(a => StripAccents(a(0))),
+    entry[JpegSofDim]("jpeg_width", 1)(a => JpegSofDim(a(0), isWidth = true)),
+    entry[JpegSofDim]("jpeg_height", 1)(a => JpegSofDim(a(0), isWidth = false)),
+    entry[CmsEstimate]("cms_estimate", 2)(a => CmsEstimate(a(0), a(1))),
+    entry[WavPcmStats]("wav_pcm_stats", 1)(a => WavPcmStats(a(0))),
+    entry[MjpegStats]("mjpeg_stats", 1)(a => MjpegStats(a(0))))
+
+  /** Column wrappers: each resolves its function by name in the session's
+    * registry, where [[graft.GraftExtensions]] put it.
+    */
   def sortedLongIntersectCount(a: Column, b: Column): Column =
     call_function("sorted_long_intersect_count", a, b)
 
@@ -1380,7 +1079,7 @@ object ArrayExpressions {
     call_function("fixed_point_dist2", a, b)
 
   def minhashSignature(hashes: Column, numPerms: Int): Column =
-    call_function("minhash_signature", hashes, org.apache.spark.sql.functions.lit(numPerms))
+    call_function("minhash_signature", hashes, lit(numPerms))
 
   def jpegWidth(payload: Column): Column = call_function("jpeg_width", payload)
 
@@ -1394,11 +1093,11 @@ object ArrayExpressions {
   def mjpegStats(payload: Column): Column = call_function("mjpeg_stats", payload)
 
   def shingleHashesSorted(text: Column, n: Int): Column =
-    call_function("shingle_hashes_sorted", text, org.apache.spark.sql.functions.lit(n))
+    call_function("shingle_hashes_sorted", text, lit(n))
 
   /** Bounded-heap top-k aggregate ([[TopKByScore]]); use under groupBy. */
   def topKByScore(score: Column, id: Column, k: Int): Column =
-    call_function("top_k_by_score", score, id, org.apache.spark.sql.functions.lit(k))
+    call_function("top_k_by_score", score, id, lit(k))
 
   def deflateRatio(text: Column): Column = call_function("deflate_ratio", text)
 
@@ -1407,19 +1106,19 @@ object ArrayExpressions {
   def ahash64(payload: Column): Column = call_function("ahash64", payload)
 
   def hyperplaneBucket(v: Column, nBits: Int): Column =
-    call_function("hyperplane_bucket", v, org.apache.spark.sql.functions.lit(nBits))
+    call_function("hyperplane_bucket", v, lit(nBits))
 
   /** Element-wise vector-sum aggregate ([[VectorSum]]); use under groupBy. */
   def vectorSum(v: Column): Column = call_function("vector_sum", v)
 
   def cdcChunks(text: Column, minSize: Int, avgBits: Int, maxSize: Int): Column =
     call_function("cdc_chunks", text,
-      org.apache.spark.sql.functions.lit(minSize),
-      org.apache.spark.sql.functions.lit(avgBits),
-      org.apache.spark.sql.functions.lit(maxSize))
+      lit(minSize),
+      lit(avgBits),
+      lit(maxSize))
 
   def docFingerprint(text: Column, n: Int): Column =
-    call_function("doc_fingerprint", text, org.apache.spark.sql.functions.lit(n))
+    call_function("doc_fingerprint", text, lit(n))
 
   /** Hit counts against [[graft.operators.TextAnalysis.Lexicons]] in
     * [[graft.operators.TextAnalysis.LexiconOrder]] order, as array<int>.
@@ -1430,7 +1129,7 @@ object ArrayExpressions {
   def charDiversity(text: Column): Column = call_function("char_diversity", text)
 
   def unicodeNormalize(text: Column, form: String): Column =
-    call_function("unicode_normalize", text, org.apache.spark.sql.functions.lit(form))
+    call_function("unicode_normalize", text, lit(form))
 
   def stripAccents(text: Column): Column = call_function("strip_accents", text)
 }

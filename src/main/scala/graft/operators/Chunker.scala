@@ -21,7 +21,6 @@ object Chunker {
   /** One row per chunk: (doc_id, chunk_idx, chunk_len, chunk_hash). */
   def chunks(docs: DataFrame, minSize: Int = 32, avgBits: Int = 6,
              maxSize: Int = 512): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     docs.select(col("doc_id"),
         posexplode(graft.functions.ArrayExpressions.cdcChunks(
           col("text"), minSize, avgBits, maxSize)).as(Seq("chunk_idx", "c")))

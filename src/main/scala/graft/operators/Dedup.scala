@@ -57,7 +57,6 @@ object Dedup {
     * trigram sets.
     */
   def ngramJaccardPairs(docs: DataFrame, mod: Int, threshold: Double): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     // Intersect SORTED 64-bit shingle hashes, not strings: for n <= 3 the
     // packed-code-point hash is injective, so counts EQUAL the string-set
     // values, and the custom merge-walk expression
@@ -90,7 +89,6 @@ object Dedup {
     */
   def ngramContainmentPairs(docs: DataFrame, mod: Int, threshold: Double,
                             minShingles: Int = 10): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     val d = graft.spreadNarrow(docs.filter(col("doc_id") % mod === 0), col("doc_id"))
       .select(col("doc_id"),
         graft.functions.ArrayExpressions.shingleHashesSorted(col("text"), 3).as("sh"))
@@ -152,7 +150,6 @@ object Dedup {
     */
   def containmentJoin(docs: DataFrame, threshold: Double = 0.8,
                       minShingles: Int = 10): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     val d = shingledDocs(docs, minShingles)
     val cand = containmentCandidates(d, threshold, positional = true)
     cand
@@ -395,14 +392,12 @@ object Dedup {
   def minhashLshCandidates(docs: DataFrame, numPerms: Int = 32, rowsPerBand: Int = 4,
                            maxBucket: Int = 64): DataFrame = {
     require(numPerms % rowsPerBand == 0)
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     bandedCandidatePairs(shingleFingerprints(docs), numPerms, rowsPerBand, maxBucket)
   }
 
   def minhashLshPairs(docs: DataFrame, numPerms: Int = 32, rowsPerBand: Int = 4,
                       threshold: Double = 0.6, maxBucket: Int = 64): DataFrame = {
     require(numPerms % rowsPerBand == 0)
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     // Sorted distinct shingle hashes, computed ONCE: minhash is
     // order-independent, and the sorted form feeds the merge-walk
     // verification directly.
@@ -566,7 +561,6 @@ object Dedup {
     * range-exchange on the hot path).
     */
   def simhashRaw(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       graft.functions.ArrayExpressions.simhash64(
         split(col("text"), "\\s+")).as("simhash64"))
@@ -592,7 +586,6 @@ object Dedup {
     * hash-matches a foreign oracle with no float discipline needed.
     */
   def editDistanceNearDupPairs(docs: DataFrame, prefixLen: Int = 64, maxDist: Int = 20): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     val sig = docs.select(col("doc_id"),
         substring(col("text"), 1, prefixLen).as("pfx"),
         graft.functions.ArrayExpressions.simhash64(

@@ -71,7 +71,6 @@ object IncrementalAnn {
                   nBits: Int = NBits, nTables: Int = NTables): String =
     Bucketed.materializedBucketedTable(spark, "annbkt_" + DirTag.dirScope(dir) + "_",
       "annbkt_" + DirTag(dir, "embeddings") + s"_b${nBits}t$nTables", "tbk", StoreBuckets) {
-      graft.functions.ArrayExpressions.register(spark)
       Similarity.tableBuckets(
           Similarity.vecFrame(corpusSlice(Tables.load(spark, dir, "embeddings"))),
           nBits, nTables)
@@ -100,7 +99,6 @@ object IncrementalAnn {
   private[graft] def candidateIds(spark: SparkSession, dir: String,
                                   nBits: Int = NBits, nTables: Int = NTables,
                                   multiProbe: Boolean = false): DataFrame = {
-    graft.functions.ArrayExpressions.register(spark)
     val store = spark.table(bucketStore(spark, dir, nBits, nTables))
 
     // the per-batch compute: signatures of the NEW vectors only
@@ -144,7 +142,6 @@ object IncrementalAnn {
   def incrementalTopK(spark: SparkSession, dir: String, k: Int = 5,
                       nBits: Int = NBits, nTables: Int = NTables,
                       multiProbe: Boolean = false): DataFrame = {
-    graft.functions.ArrayExpressions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
     val probeVecs = Similarity.vecFrame(newSlice(emb))
     val storeVecs = spark.table(vectorStore(spark, dir))

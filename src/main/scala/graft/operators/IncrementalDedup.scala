@@ -63,7 +63,6 @@ object IncrementalDedup {
   private def bandStore(spark: SparkSession, dir: String): String =
     Bucketed.materializedBucketedTable(spark, "bandstore_" + DirTag.dirScope(dir) + "_",
       "bandstore_" + DirTag(dir, "documents"), "bsig", StoreBuckets) {
-      graft.functions.ArrayExpressions.register(spark)
       Dedup.bandSignatures(
           Dedup.shingleFingerprints(corpusSlice(Tables.load(spark, dir, "documents"))),
           NumPerms, RowsPerBand)
@@ -74,7 +73,6 @@ object IncrementalDedup {
   private def fingerprintStore(spark: SparkSession, dir: String): String =
     Bucketed.materializedBucketedTable(spark, "fpstore_" + DirTag.dirScope(dir) + "_",
       "fpstore_" + DirTag(dir, "documents"), "doc_id", StoreBuckets) {
-      graft.functions.ArrayExpressions.register(spark)
       Dedup.shingleFingerprints(corpusSlice(Tables.load(spark, dir, "documents")))
     }
 
@@ -84,7 +82,6 @@ object IncrementalDedup {
     * the two persisted stores.
     */
   def incrementalPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayExpressions.register(spark)
     val docs = Tables.load(spark, dir, "documents")
     val storeBands = spark.table(bandStore(spark, dir))
     val storeFp = spark.table(fingerprintStore(spark, dir))

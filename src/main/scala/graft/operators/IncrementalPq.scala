@@ -145,7 +145,6 @@ object IncrementalPq {
                   coarseK: Int = ProductQuantization.CoarseK): String =
     Bucketed.materializedBucketedTable(spark, "pqcc_" + DirTag.dirScope(dir) + "_",
       "pqcc_" + DirTag(dir, "embeddings") + s"_k$coarseK", "ccell", StoreBuckets) {
-      graft.functions.ArrayExpressions.register(spark)
       coarseOf(trainSlice(KMeans.quantizedPts(Tables.load(spark, dir, "embeddings"), spreadInput = false)),
         coarseK)
     }
@@ -157,7 +156,6 @@ object IncrementalPq {
                     coarseK: Int = ProductQuantization.CoarseK): String =
     Bucketed.materializedBucketedTable(spark, "pqcb_" + DirTag.dirScope(dir) + "_",
       "pqcb_" + DirTag(dir, "embeddings") + s"_k$coarseK", "sub", StoreBuckets) {
-      graft.functions.ArrayExpressions.register(spark)
       val coarse = spark.table(coarseStore(spark, dir, coarseK))
       val pts = KMeans.quantizedPts(Tables.load(spark, dir, "embeddings"), spreadInput = false)
       val r = residuals(trainSlice(pts), coarse).ckpt()
@@ -178,7 +176,6 @@ object IncrementalPq {
                  coarseK: Int = ProductQuantization.CoarseK): String =
     Bucketed.materializedBucketedTable(spark, "pqix_" + DirTag.dirScope(dir) + "_",
       "pqix_" + DirTag(dir, "embeddings") + s"_k$coarseK", "ccell", StoreBuckets) {
-      graft.functions.ArrayExpressions.register(spark)
       val coarse = spark.table(coarseStore(spark, dir, coarseK))
       val cb = spark.table(codebookStore(spark, dir, coarseK))
       val pts = KMeans.quantizedPts(Tables.load(spark, dir, "embeddings"), spreadInput = false)
@@ -200,7 +197,6 @@ object IncrementalPq {
                    coarseK: Int = ProductQuantization.CoarseK): String =
     Bucketed.materializedBucketedTable(spark, "pqvx_" + DirTag.dirScope(dir) + "_",
       "pqvx_" + DirTag(dir, "embeddings") + s"_k$coarseK", "ccell", StoreBuckets) {
-      graft.functions.ArrayExpressions.register(spark)
       val coarse = spark.table(coarseStore(spark, dir, coarseK))
       val pts = KMeans.quantizedPts(Tables.load(spark, dir, "embeddings"), spreadInput = false)
       vecsOf(assigned(trainSlice(pts), coarse))
@@ -322,7 +318,6 @@ object IncrementalPq {
   def incrementalAdcTopK(spark: SparkSession, dir: String, topK: Int = 3,
                          nProbe: Int = ProductQuantization.NProbe,
                          coarseK: Int = ProductQuantization.CoarseK): DataFrame = {
-    graft.functions.ArrayExpressions.register(spark)
     val coarse = spark.table(coarseStore(spark, dir, coarseK))
     val cb = spark.table(codebookStore(spark, dir, coarseK))
     val stored = spark.table(codesStore(spark, dir, coarseK))
@@ -371,7 +366,6 @@ object IncrementalPq {
                             nProbe: Int = ProductQuantization.NProbe,
                             coarseK: Int = ProductQuantization.CoarseK,
                             shortlist: Int = 0): DataFrame = {
-    graft.functions.ArrayExpressions.register(spark)
     val l = if (shortlist > 0) shortlist else ProductQuantization.RerankFactor * topK
     val coarse = spark.table(coarseStore(spark, dir, coarseK))
     val cb = spark.table(codebookStore(spark, dir, coarseK))
@@ -429,7 +423,6 @@ object IncrementalPq {
     * the catalog-vs-recount equality is a pinned spec, not an assumption.
     */
   private[graft] def recountGeometry(spark: SparkSession, dir: String): Int = {
-    graft.functions.ArrayExpressions.register(spark)
     ProductQuantization.sizedCoarseK(
       trainSlice(KMeans.quantizedPts(Tables.load(spark, dir, "embeddings"), spreadInput = false)).count())
   }
@@ -525,7 +518,6 @@ object IncrementalPq {
                     coarseK: Int = ProductQuantization.CoarseK): String =
     Bucketed.materializedBucketedTable(spark, s"pqd${day}_" + DirTag.dirScope(dir) + "_",
       s"pqd${day}_" + DirTag(dir, "embeddings") + s"_k$coarseK", "ccell", StoreBuckets) {
-      graft.functions.ArrayExpressions.register(spark)
       val coarse = spark.table(coarseStore(spark, dir, coarseK))
       val cb = spark.table(codebookStore(spark, dir, coarseK))
       val slice = cycleSlice(spark, dir, coarse, isDayVec(day)(col("vec_id")))
@@ -585,7 +577,6 @@ object IncrementalPq {
                       coarseK: Int = ProductQuantization.CoarseK): String =
     Bucketed.materializedBucketedTable(spark, s"pqv${day}_" + DirTag.dirScope(dir) + "_",
       s"pqv${day}_" + DirTag(dir, "embeddings") + s"_k$coarseK", "ccell", StoreBuckets) {
-      graft.functions.ArrayExpressions.register(spark)
       val coarse = spark.table(coarseStore(spark, dir, coarseK))
       val slice = cycleSlice(spark, dir, coarse, isDayVec(day)(col("vec_id")))
       vecsOf(assigned(slice, coarse))
@@ -631,7 +622,6 @@ object IncrementalPq {
                        days: Int = 2, withDeletes: Boolean = false,
                        dayStore: (SparkSession, String, Int, Int) => String = dayCodesStore,
                        variantTag: String = "g"): DataFrame = {
-    graft.functions.ArrayExpressions.register(spark)
     val coarse = spark.table(coarseStore(spark, dir, coarseK))
     val cb = spark.table(codebookStore(spark, dir, coarseK))
     val store = spark.table(
@@ -656,7 +646,6 @@ object IncrementalPq {
                           coarseK: Int = ProductQuantization.CoarseK,
                           days: Int = 2, withDeletes: Boolean = false,
                           shortlist: Int = 0): DataFrame = {
-    graft.functions.ArrayExpressions.register(spark)
     val l = if (shortlist > 0) shortlist else ProductQuantization.RerankFactor * topK
     val coarse = spark.table(coarseStore(spark, dir, coarseK))
     val cb = spark.table(codebookStore(spark, dir, coarseK))
@@ -695,7 +684,6 @@ object IncrementalPq {
                                           bCodes: DataFrame, topK: Int = 3,
                                           nProbe: Int = ProductQuantization.NProbe,
                                           coarseK: Int = ProductQuantization.CoarseK): DataFrame = {
-    graft.functions.ArrayExpressions.register(spark)
     val coarse = spark.table(coarseStore(spark, dir, coarseK))
     val cb = spark.table(codebookStore(spark, dir, coarseK))
     val stored = spark.table(codesStore(spark, dir, coarseK))
@@ -711,7 +699,6 @@ object IncrementalPq {
     */
   private[graft] def frozenModel(spark: SparkSession, dir: String,
                                  coarseK: Int = ProductQuantization.CoarseK): (DataFrame, DataFrame, Int) = {
-    graft.functions.ArrayExpressions.register(spark)
     val coarse = spark.table(coarseStore(spark, dir, coarseK))
     val cb = spark.table(codebookStore(spark, dir, coarseK))
     val domSz = coarse.select(size(col("cc"))).head.getInt(0)

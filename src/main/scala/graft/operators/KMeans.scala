@@ -54,7 +54,6 @@ object KMeans {
     */
   private[operators] def quantizedPts(emb: DataFrame,
                                       spreadInput: Boolean = true): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     // Spread across every core BEFORE the CPU-heavy derivations (shingle
     // of the dedup family — r21 stage profile: the Lloyd/coarse argmin
     // chains of x108 ran as ONE task off the single-file local scan, 3 s

@@ -323,7 +323,6 @@ object Multimodal {
     * a REAL encoder (`javax.imageio` output parsed exactly).
     */
   def jpegDims(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     plantedJpegCorpus(docs)
       .select(col("doc_id"),
         length(col("payload")).cast("bigint").as("n_bytes"),
@@ -378,7 +377,6 @@ object Multimodal {
     * formula, and truncated blobs must surface as NULLs, not errors.
     */
   def wavPcmDecode(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     val st = graft.functions.ArrayExpressions.wavPcmStats(col("payload"))
     plantedWavCorpus(docs)
       .select(col("doc_id"), st.as("st"))
@@ -431,7 +429,6 @@ object Multimodal {
     * count and dims replay from the plant formulas; truncation → NULL.
     */
   def mjpegDemux(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     val st = graft.functions.ArrayExpressions.mjpegStats(col("payload"))
     plantedMjpegCorpus(docs)
       .select(col("doc_id"), st.as("st"))
@@ -633,7 +630,6 @@ object Multimodal {
     * same exclusions.
     */
   def featureSummary(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(spark)
     import spark.implicits._
     val image = decodePlantedPng(spark,
         docs.filter(col("doc_id") % 3 === 0).select(col("doc_id")).as[Long]).toDF()
@@ -698,7 +694,6 @@ object Multimodal {
   def ahashNearDupPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4 bands guarantee recall 1 only up to Hamming distance 3")
     val spark = docs.sparkSession
-    graft.functions.ArrayExpressions.register(spark)
     val hashed = graft.spreadNarrow(plantedAhashCorpus(docs)
       .select(col("doc_id"),
         graft.functions.ArrayExpressions.ahash64(encode(col("text"), "UTF-8")).as("ahash64")),

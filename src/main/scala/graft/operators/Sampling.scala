@@ -41,7 +41,6 @@ object Sampling {
     * corpus.
     */
   def kPerGroup(df: DataFrame, groupCol: String, idCol: String, k: Int): DataFrame = {
-    graft.functions.ArrayExpressions.register(df.sparkSession)
     // TopKByScore keeps the LARGEST scores: negate the hash to keep the
     // smallest-hash rows (deterministic "uniform" order).
     df.groupBy(col(groupCol))
@@ -92,7 +91,6 @@ object Sampling {
     * cross the wire, never the corpus.
     */
   def prioritySample(docs: DataFrame, k: Int = 25): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     val base = docs.select(col("source"), col("doc_id"),
       greatest(length(col("text")).cast("long"), lit(1L)).as("w"),
       (wHash(col("doc_id")) + 1L).as("u"))

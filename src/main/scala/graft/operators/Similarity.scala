@@ -30,8 +30,7 @@ object Similarity {
 
   /** Cosine via the custom codegen'd expression (single fused loop; the
     * builtin `aggregate`/`zip_with` composition pays per-element lambda
-    * dispatch). Callers must have run `ArrayExpressions.register`; all
-    * operators here do.
+    * dispatch).
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.ArrayExpressions.cosineSim(a, b)
@@ -49,7 +48,6 @@ object Similarity {
     * window. Deterministic tie-break on cand_id.
     */
   def bruteForceTopK(emb: DataFrame, nProbes: Int, k: Int): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val probes = emb.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("probe_id"), asDouble(col("embedding")).as("pv"))
@@ -73,7 +71,6 @@ object Similarity {
     * [[bruteForceTopK]] (same ordering and tie-breaks).
     */
   def aggTopK(emb: DataFrame, nProbes: Int, k: Int): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     val probes = emb.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("probe_id"), asDouble(col("embedding")).as("pv"))
     val cands = emb.select(col("vec_id").as("cand_id"), asDouble(col("embedding")).as("cv"))
@@ -94,7 +91,6 @@ object Similarity {
     * the LSH/IVF scale paths.
     */
   def nearDupPairs(emb: DataFrame, mod: Int, threshold: Double): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     val d = emb.filter(col("vec_id") % mod === 0)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val a = d.select(col("vec_id").as("vec_a"), col("v").as("va"))
@@ -114,7 +110,6 @@ object Similarity {
     * dot-product kernels get SIMD-friendly).
     */
   def quantizationStats(emb: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     val withQ = emb
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       .withColumn("scale", expr("aggregate(v, 0d, (m, x) -> greatest(m, abs(x))) / 127d"))
@@ -201,7 +196,6 @@ object Similarity {
     */
   def lshNearDupPairs(emb: DataFrame, threshold: Double,
                       nBits: Int = 8, nTables: Int = 8): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     val vecs = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     verifyCosinePairs(vecs, lshCandidatePairs(vecs, nBits, nTables), threshold)
   }
@@ -247,7 +241,6 @@ object Similarity {
     */
   def sizedNearDup(emb: DataFrame, threshold: Double = 0.9,
                    targetOccupancy: Int = 32, nTables: Int = 4): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     val vecs = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val nBits = occupancySizedBits(vecs.count(), targetOccupancy, maxBits = 64 / nTables)
     verifyCosinePairs(vecs, multiProbeCandidatePairs(vecs, nBits, nTables), threshold)
@@ -364,7 +357,6 @@ object Similarity {
     */
   def lshTopK(emb: DataFrame, nProbes: Int, k: Int,
               nBits: Int = 6, nTables: Int = 8): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     val vecs = vecFrame(emb)
     val index = tableBuckets(vecs, nBits, nTables)
     val probeIdx = index.filter(col("vec_id") < nProbes)
@@ -400,7 +392,6 @@ object Similarity {
     */
   def multiProbeTopK(emb: DataFrame, nProbes: Int, k: Int,
                      nBits: Int = 6, nTables: Int = 8): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     val vecs = vecFrame(emb)
     val index = tableBuckets(vecs, nBits, nTables)
     // one row per (probe, table, flip): flip 0 = the exact bucket, then
@@ -437,7 +428,6 @@ object Similarity {
     * anything.
     */
   def int8RescoreTopK(emb: DataFrame, nProbes: Int, k: Int, shortlist: Int = 15): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     val vecs = vecFrame(emb)
     val q = vecs
       .withColumn("scale", expr("aggregate(v, 0d, (m, x) -> greatest(m, abs(x))) / 127d"))
@@ -571,7 +561,6 @@ object Similarity {
   }
 
   def ivfTopK(emb: DataFrame, nProbes: Int, k: Int, nprobe: Int = 5): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val withV0 = emb.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val (centroids, domDim) = fixedPointCentroids(withV0)
@@ -606,7 +595,6 @@ object Similarity {
     * pair work (BASELINE.md, "Round-14: scale studies for x87/x88/x89").
     */
   private def cellAssignments(emb: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(emb.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val withV0 = emb.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val (centroids, domDim) = fixedPointCentroids(withV0)

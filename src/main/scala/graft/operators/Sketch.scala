@@ -139,7 +139,6 @@ object Sketch {
   }
 
   def heavyHitters(docs: DataFrame, k: Int = 10): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     // ONE tokenize pass: the exact top-k groupBy and the fused total+CMS
     // aggregate need different shuffle keys (token vs global), so no
     // exchange reuse can join them — materialize the exploded token

@@ -39,7 +39,6 @@ object TextAnalysis {
     * filter-lambda passes over the token array.
     */
   def langId(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     docs.select(col("doc_id"), col("lang").as("labeled_lang"),
         graft.functions.ArrayExpressions.lexiconHits(col("text")).as("h"))
       .select(col("doc_id"), col("labeled_lang"),
@@ -488,7 +487,6 @@ object TextAnalysis {
     * document).
     */
   def compressionInvariants(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     docs
       .select(col("source"),
         graft.functions.ArrayExpressions.deflateRatio(col("text")).as("r"),
@@ -878,7 +876,6 @@ object TextAnalysis {
     * gate on purpose.
     */
   def charDiversityStats(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     docs.select(col("doc_id"),
         graft.functions.ArrayExpressions.charDiversity(col("text")).as("s"))
       .select(col("doc_id"),
@@ -909,7 +906,6 @@ object TextAnalysis {
     * (already-NFC corpus) a read-only scan.
     */
   def unicodeNormalizeAudit(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     docs.select(col("doc_id"), substring(col("text"), 1, 40).as("seg"))
       .withColumn("decomposed", regexp_replace(col("seg"), "e", "e\u0301"))
       .withColumn("nfc",
@@ -932,7 +928,6 @@ object TextAnalysis {
     * text operator once the bench consumed values.
     */
   def fingerprint(docs: DataFrame): DataFrame = {
-    graft.functions.ArrayExpressions.register(docs.sparkSession)
     docs.select(col("doc_id"),
         graft.functions.ArrayExpressions.docFingerprint(col("text"), 4).as("fingerprint"))
       .orderBy("doc_id")

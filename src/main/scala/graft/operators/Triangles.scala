@@ -34,7 +34,6 @@ object Triangles {
     * count riding every row (broadcast 1-row join — the q29/x8 class).
     */
   def topTriangleNodes(li: DataFrame, k: Int = 20): DataFrame = {
-    graft.functions.ArrayExpressions.register(li.sparkSession)
     // undirected simple edges, one row per {a < b} pair
     val e = PageRank.coPurchaseEdges(li)
       .filter(col("src") < col("dst"))

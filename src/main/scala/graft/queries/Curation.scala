@@ -21,7 +21,6 @@ object Curation {
     //    earlier qualityStats-then-self-join form paid a second documents
     //    scan, a shuffle join on doc_id, and qualityStats' global sort,
     //    all to attach one column the scan can compute in place
-    graft.functions.ArrayExpressions.register(spark)
     val gated = docs
       .withColumn("quality_score", TextAnalysis.qualityScoreOn(col("text")))
       .filter(col("quality_score") >= minQuality)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{CkptOps, Tables}
+import graft.sources.LayoutCache
 import graft.streaming.{GapEvent, StreamingGapSessionize}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -9,7 +10,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 import java.util.concurrent.atomic.AtomicInteger
 
 /** The driver-visible Structured Streaming rows. Every row runs through
@@ -149,7 +149,7 @@ object StreamingQueries {
           .filter(p => isStale(p))
         finally listing.close()
       stale.count { p =>
-        try { deleteRecursively(p); true }
+        try { LayoutCache.deleteRecursively(p); true }
         catch { case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
           System.err.println(s"[stream-scratch] sweep of $p lost a race (${e.getClass.getSimpleName}); continuing")
           false
@@ -181,13 +181,6 @@ object StreamingQueries {
       s"wal=${dur("walCommit").lazyZip(dur("commitOffsets")).map(_ + _).sum}ms " +
       s"getBatch=${dur("getBatch").lazyZip(dur("latestOffset")).map(_ + _).sum}ms")
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
 
   /** The `part-*` files of a parquet directory, in name order. */
   private def partFiles(dir: String): Array[Path] = {
@@ -229,7 +222,7 @@ object StreamingQueries {
       val empty = s"${feedDir}_empty"
       events.limit(0).write.mode("overwrite").parquet(empty)
       missing.foreach(i => Files.copy(partFiles(empty).head, Paths.get(feedDir, f"part-$i%05d-empty.parquet")))
-      deleteRecursively(Paths.get(empty))
+      LayoutCache.deleteRecursively(Paths.get(empty))
     }
     val base = System.currentTimeMillis() - 1000L * 3600
     partFiles(feedDir).zipWithIndex.foreach { case (p, i) =>
@@ -305,7 +298,7 @@ object StreamingQueries {
         spark.catalog.dropTempView(r.view)
         spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
-    } finally if (spool.isEmpty) deleteRecursively(r.spool)
+    } finally if (spool.isEmpty) LayoutCache.deleteRecursively(r.spool)
   }
 
   /** [[replay]] into a memory sink: `plan` maps the replayed stream to the

@@ -6,8 +6,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.nio.file.Files
 
 /** Small-files compaction — the standard maintenance pass of every
   * file-based lake: streaming ingest and fine-grained batch writes leave
@@ -32,13 +31,6 @@ object Compaction {
   private val SmallFiles = 64
   /** Compaction target. */
   private val TargetFiles = 4
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
 
   private def countParts(dir: String): Long = {
     val s = Files.list(java.nio.file.Paths.get(dir))
@@ -71,7 +63,7 @@ object Compaction {
         .withColumn("was_fragmented", lit(nSmall >= frag))
         .withColumn("is_compacted", lit(nBig <= TargetFiles))
         .ckpt()
-    } finally deleteRecursively(tmp)
+    } finally LayoutCache.deleteRecursively(tmp)
   }
 
   /** x43: schema evolution — a corpus written in waves where LATER waves
@@ -101,6 +93,6 @@ object Compaction {
           expr("bit_xor(doc_id)").as("id_xor"))
         .orderBy("source")
         .ckpt()
-    } finally deleteRecursively(tmp)
+    } finally LayoutCache.deleteRecursively(tmp)
   }
 }

@@ -112,11 +112,25 @@ private[graft] object LayoutCache {
       } finally kids.close()
     }
 
+  /** Delete the tree under `p`, skipping any file that cannot be deleted:
+    * a cache sweep goes on past a file another process still holds.
+    */
   def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       val all = Files.walk(p)
       try all.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(f => try Files.deleteIfExists(f) catch { case _: java.io.IOException => () })
+      finally all.close()
+    }
+
+  /** Delete the tree under `p`, throwing on the first file that cannot be
+    * deleted (or that vanishes mid-walk), so a caller can tell that it
+    * lost a race, as the streaming scratch sweep does.
+    */
+  def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val all = Files.walk(p)
+      try all.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
       finally all.close()
     }
 }

@@ -6,8 +6,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.nio.file.Files
 
 /** JSONL (one JSON object per line) source/sink round-trip — the de-facto
   * interchange format of LLM data pipelines (every public corpus release
@@ -21,13 +20,6 @@ import java.util.Comparator
   * fingerprints over the ORIGINAL parquet.
   */
 object Jsonl {
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
 
   /** Write `df` in `format`, read it back with the SAME explicit schema,
     * and hand the round-tripped frame to `f` (whose result must not
@@ -43,7 +35,7 @@ object Jsonl {
       val path = tmp.resolve("docs").toString
       df.write.mode("overwrite").format(format).save(path)
       f(df.sparkSession.read.schema(df.schema).format(format).load(path))
-    } finally deleteRecursively(tmp)
+    } finally LayoutCache.deleteRecursively(tmp)
   }
 
   private[graft] def withJsonlRoundtrip[T](df: DataFrame)(f: DataFrame => T): T =

@@ -18,7 +18,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("sorted_long_intersect_count == size(array_intersect) on random sorted sets") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(1)
     val rows = Seq.fill(50) {
       val a = Seq.fill(rnd.nextInt(50) + 1)(rnd.nextInt(40).toLong).distinct.sorted
@@ -34,7 +33,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("cosine_similarity == aggregate/zip_with composition within 1e-12") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(2)
     val rows = Seq.fill(30)((Seq.fill(64)(rnd.nextDouble() - 0.5), Seq.fill(64)(rnd.nextDouble() - 0.5)))
     val df = rows.toDF("a", "b")
@@ -48,7 +46,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("minhash_signature matches the per-permutation definition") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(3)
     val hashes = Seq.fill(100)(rnd.nextLong())
     val df = Seq(Tuple1(hashes)).toDF("h")
@@ -63,7 +60,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("expressions are SQL-visible after registration") {
-    ArrayExpressions.register(spark)
     val r = spark.sql(
       "SELECT cosine_similarity(array(1d, 0d), array(1d, 0d)) AS c, " +
         "sorted_long_intersect_count(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS n").collect()(0)
@@ -73,7 +69,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("shingle_hashes_sorted: injective for n<=3 — set sizes and intersections equal string-shingle sets") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(7)
     def randText(len: Int) =
       Seq.fill(len)("abcdef 0189"(rnd.nextInt(11))).mkString
@@ -106,7 +101,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("top_k_by_score aggregate == window row_number top-k, including score ties") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(9)
     // few distinct scores => plenty of ties to exercise the id tie-break
     val rows = Seq.fill(2000)((rnd.nextInt(8).toLong, rnd.nextInt(20) / 10.0, rnd.nextLong() & 0xffffL))
@@ -126,7 +120,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("top_k_by_score skips NaN scores instead of freezing the heap") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     // NaN first so an unguarded heap would pin it at the root
     val df = Seq((1L, Double.NaN, 99L), (1L, 0.3, 3L), (1L, 0.9, 1L), (1L, 0.5, 2L))
       .toDF("g", "score", "id")
@@ -139,7 +132,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("deflate_ratio separates repetitive, prose, and random text") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(31)
     val repetitive = "spam ham " * 300
     val prose = Seq.fill(120)(Seq.fill(6)("abcdefghijklmnop".substring(0, rnd.nextInt(12) + 3)).mkString(" ")).mkString(". ")
@@ -160,7 +152,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("hyperplane_bucket: deterministic, dim-independent plan size, dim-1024 works") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(7)
     // dim 1024: the round-2 per-dimension Column formulation would build
     // 1024 × 16 plan nodes here; the fused kernel is one node.
@@ -188,7 +179,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("vector_sum aggregate == per-dimension sums; ragged rows dropped via size grouping") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(8)
     val rows = (0 until 200).map(i => (i % 3, Seq.fill(32)(rnd.nextDouble() - 0.5)))
     val df = rows.toDF("g", "v").repartition(8)
@@ -209,7 +199,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("vector_sum on a ragged group is deterministic: max-length vectors win, any layout") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     // lengths 2/4/8 mixed in one group: the contract is "element-wise sum
     // of exactly the max-length vectors" regardless of partition/merge
     // order — shorter rows drop deterministically
@@ -226,7 +215,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("wrong-arity SQL calls raise the standard WRONG_NUM_ARGS analysis error") {
-    ArrayExpressions.register(spark)
     val tooFew = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT minhash_signature(array(1L))").collect()
     }
@@ -239,9 +227,33 @@ class ExpressionsSpec extends AnyFunSuite {
       tooMany.getMessage.contains("1 parameters"), tooMany.getMessage)
   }
 
+  test("a NULL or a column for a literal parameter fails at analysis like a built-in") {
+    // every literal parameter of every function: `?` marks it
+    val calls = Seq(
+      "minhash_signature(array(1L, 2L), ?)" -> "numPerms",
+      "shingle_hashes_sorted('abc', ?)" -> "n",
+      "hyperplane_bucket(array(1d), ?)" -> "nBits",
+      "cdc_chunks('abc', ?, 3, 16)" -> "minSize",
+      "cdc_chunks('abc', 4, ?, 16)" -> "avgBits",
+      "cdc_chunks('abc', 4, 3, ?)" -> "maxSize",
+      "doc_fingerprint('abc', ?)" -> "n",
+      "top_k_by_score(1d, 1L, ?)" -> "k",
+      "unicode_normalize('abc', ?)" -> "form")
+    for ((call, param) <- calls) {
+      val nullArg = if (param == "form") "CAST(NULL AS STRING)" else "CAST(NULL AS INT)"
+      for ((arg, condition) <- Seq(
+          nullArg -> "INVALID_PARAMETER_VALUE.NULL", "n" -> "NON_FOLDABLE_ARGUMENT")) {
+        val sql = s"SELECT ${call.replace("?", arg)} FROM VALUES (4) AS t(n)"
+        val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(sql).collect())
+        assert(e.getCondition == condition, s"$sql: ${e.getMessage}")
+        assert(e.getMessage.contains(s"`${call.takeWhile(_ != '(')}`") &&
+          e.getMessage.contains(s"`$param`"), s"$sql: ${e.getMessage}")
+      }
+    }
+  }
+
   test("lexicon_hits == split + per-lexicon filter counts on adversarial whitespace") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val texts = Seq(
       "the la que und is  el\tder\nthe\r\nlade",
       "  leading and trailing  ",
@@ -261,7 +273,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("doc_fingerprint == md5(concat of sorted distinct shingles) incl. unicode + short strings") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
       "aaaa", "aaa", "ab", "", "ñandú emoji 😀 mixed ascii",
@@ -277,7 +288,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("cdc_chunks: bytes conserved, sizes bounded, deterministic, and edits stay local") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(11)
     val base = lowerAlpha(rnd, 4000)
     val texts = Seq(base, "", "x", lowerAlpha(rnd, 31), lowerAlpha(rnd, 600),
@@ -329,10 +339,9 @@ class ExpressionsSpec extends AnyFunSuite {
     // The kernels' correctness is pinned per-function above through the
     // Column wrappers; what this test pins is the SQL surface itself —
     // name resolution, argument binding order, and literal-argument
-    // evaluation (intArg) for EVERY registered name, aggregates included.
+    // evaluation (`Args.int`) for EVERY registered name, aggregates included.
     // A builder that swapped two arguments or mis-evaluated a literal
     // would pass every wrapper test and break every spark.sql caller.
-    ArrayExpressions.register(spark)
     // scalars: one row through SQL text, the same expressions through the
     // wrappers — results must be identical field for field
     val scalarSql =
@@ -378,50 +387,101 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("every functionBuilders entry is registered and SQL-resolvable") {
-    ArrayExpressions.register(spark)
-    val registry = spark.sessionState.functionRegistry
-    ArrayExpressions.functionBuilders.foreach { case (name, className, _) =>
-      assert(registry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name)), s"$name not registered")
-      assert(Class.forName(className) != null) // ExpressionInfo class names stay real
+    // GraftExtensions is the only registration path: the shared session and
+    // a session cloned from it resolve every name
+    for (session <- Seq(spark, spark.newSession())) {
+      val registry = session.sessionState.functionRegistry
+      ArrayExpressions.functionBuilders.foreach { case (name, className, _) =>
+        assert(registry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)), s"$name not registered")
+        assert(Class.forName(className) != null) // ExpressionInfo class names stay real
+      }
     }
   }
 
   test("EVERY kernel: interpreted eval == codegen result (factoryMode sweep)") {
-    // each custom Expression carries a hand-written doGenCode next to its
-    // nullSafeEval; Spark only ever exercises one of them per plan, so a
-    // divergence (an index off by one in the generated loop, a missed
-    // null guard) ships silently. Force both paths over one row that
-    // touches every registered scalar kernel and require identical
-    // results. (CODEGEN_ONLY would throw on any aggregate in the row, so
-    // the aggregates get their own two-mode GROUP BY below.)
-    ArrayExpressions.register(spark)
-    val scalarSql =
-      "SELECT cosine_similarity(array(3d, 4d), array(4d, 3d)) AS cos, " +
-        "sorted_long_intersect_count(array(1L, 2L, 5L), array(2L, 3L, 5L)) AS isect, " +
-        "minhash_signature(array(7L, 9L), 4) AS mh, " +
-        "shingle_hashes_sorted('abcdef', 3) AS sh, " +
-        "simhash64(array('a', 'b', 'a')) AS sim, " +
-        "hyperplane_bucket(array(1d, 0d, 0d), 4) AS hb, " +
-        "cdc_chunks('hello world hello chunk', 4, 3, 16) AS ch, " +
-        "doc_fingerprint('abc abc xyz', 2) AS fp, " +
-        "lexicon_hits('the cat and the dog') AS lex, " +
-        "deflate_ratio('aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa') AS dr"
+    // Spark runs only one of an expression's two paths in a given plan: the
+    // generated code (whole-stage codegen) or `eval`. Run every scalar
+    // kernel both ways and require identical results. ConstantFolding is
+    // excluded in both modes: over literal inputs it would otherwise fold
+    // each call through `eval` before either path ran. Codegen fallback is
+    // off, so code that fails to compile fails the test. (CODEGEN_ONLY
+    // would throw on an aggregate in the row, so the aggregates get their
+    // own two-mode GROUP BY below.)
+    def hex(b: Array[Byte]): String = b.map("%02X".format(_)).mkString
+    // one JPEG frame: SOI, SOF0 (8-bit, height 2, width 3, one component),
+    // SOS, two entropy bytes, EOI
+    val frame = "FFD8FFC0000B080002000301011100FFDA0008010100003F001234FFD9"
+    // RIFF/WAVE, 16-bit mono PCM, samples 1 and -1
+    val wav = "52494646" + "24000000" + "57415645" +
+      "666D7420" + "10000000" + "0100" + "0100" + "401F0000" + "803E0000" + "0200" + "1000" +
+      "64617461" + "04000000" + "0100FFFF"
+    val sketch = {
+      val cms = org.apache.spark.util.sketch.CountMinSketch.create(1, 4, 42)
+      cms.add("a"); cms.add("a")
+      hex(cms.toByteArray)
+    }
+    // (function, call, whether the kernel returns NULL on that input)
+    val calls: Seq[(String, String, Boolean)] = Seq(
+      ("sorted_long_intersect_count", "sorted_long_intersect_count(array(1L, 2L, 5L), array(2L, 3L, 5L))", false),
+      ("sorted_long_intersect", "sorted_long_intersect(array(1L, 2L, 5L), array(2L, 3L, 5L))", false),
+      ("cosine_similarity", "cosine_similarity(array(3d, 4d), array(4d, 3d))", false),
+      ("fixed_point_dist2", "fixed_point_dist2(array(1d, 5d), array(4d, 1d))", false),
+      ("fixed_point_dist2", "fixed_point_dist2(array(1d), array(1d, 2d))", true),
+      ("minhash_signature", "minhash_signature(array(7L, 9L), 4)", false),
+      ("shingle_hashes_sorted", "shingle_hashes_sorted('abcdef', 3)", false),
+      ("deflate_ratio", "deflate_ratio('aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa')", false),
+      ("simhash64", "simhash64(array('a', 'b', 'a'))", false),
+      ("ahash64", "ahash64(encode('abcabc', 'UTF-8'))", false),
+      ("hyperplane_bucket", "hyperplane_bucket(array(1d, 0d, 0d), 4)", false),
+      ("cdc_chunks", "cdc_chunks('hello world hello chunk', 4, 3, 16)", false),
+      ("doc_fingerprint", "doc_fingerprint('abc abc xyz', 2)", false),
+      ("lexicon_hits", "lexicon_hits('the cat and the dog')", false),
+      ("char_diversity", "char_diversity('h\u00e9llo \ud834\udd1e\ud834\udd1e')", false),
+      ("unicode_normalize", "unicode_normalize('e\u0301l\u00e9', 'NFC')", false),
+      ("strip_accents", "strip_accents('h\u00e9llo we\u0301')", false),
+      ("jpeg_width", s"jpeg_width(X'$frame')", false),
+      ("jpeg_width", "jpeg_width(X'00')", true),
+      ("jpeg_height", s"jpeg_height(X'$frame')", false),
+      ("jpeg_height", "jpeg_height(X'FFD8FFD9')", true),
+      ("cms_estimate", s"cms_estimate(X'$sketch', 'a')", false),
+      ("cms_estimate", "cms_estimate(X'00', 'a')", true),
+      ("wav_pcm_stats", s"wav_pcm_stats(X'$wav')", false),
+      ("wav_pcm_stats", "wav_pcm_stats(X'00')", true),
+      ("mjpeg_stats", s"mjpeg_stats(X'$frame')", false),
+      ("mjpeg_stats", s"mjpeg_stats(X'${frame}00')", true))
+    val scalars = ArrayExpressions.functionBuilders.collect {
+      case (name, cls, _) if !classOf[org.apache.spark.sql.catalyst.expressions.aggregate
+          .AggregateFunction].isAssignableFrom(Class.forName(cls)) => name
+    }
+    assert(calls.map(_._1).toSet == scalars.toSet,
+      s"sweep misses ${scalars.toSet -- calls.map(_._1)}, or names a non-scalar")
+    val scalarSql = calls.zipWithIndex
+      .map { case ((_, call, _), i) => s"$call AS c$i" }.mkString("SELECT ", ", ", "")
     val aggSql =
       "SELECT k, top_k_by_score(s, id, 2) AS top, vector_sum(v) AS vs FROM VALUES " +
         "(0, 1d, 10L, array(1d, 2d)), (0, 3d, 11L, array(10d, 20d)), " +
         "(0, 2d, 12L, array(100d, 200d)) AS t(k, s, id, v) GROUP BY k"
-    val confKey = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(confKey)
-    def inMode(mode: String): (String, String) = {
-      spark.conf.set(confKey, mode)
-      try (spark.sql(scalarSql).collect()(0).toString, spark.sql(aggSql).collect()(0).toString)
-      finally prev.fold(spark.conf.unset(confKey))(v => spark.conf.set(confKey, v))
+    def inMode(wholeStage: Boolean, factoryMode: String): (org.apache.spark.sql.Row, String) = {
+      val confs = Map(
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConstantFolding",
+        "spark.sql.codegen.wholeStage" -> wholeStage.toString,
+        "spark.sql.codegen.factoryMode" -> factoryMode,
+        "spark.sql.codegen.fallback" -> "false")
+      val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try (spark.sql(scalarSql).collect()(0), spark.sql(aggSql).collect()(0).toString)
+      finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
-    val (scalarCodegen, aggCodegen) = inMode("CODEGEN_ONLY")
-    val (scalarInterp, aggInterp) = inMode("NO_CODEGEN")
-    assert(scalarCodegen == scalarInterp,
-      s"scalar kernels diverge:\n  codegen:     $scalarCodegen\n  interpreted: $scalarInterp")
+    val (scalarCodegen, aggCodegen) = inMode(wholeStage = true, "CODEGEN_ONLY")
+    val (scalarInterp, aggInterp) = inMode(wholeStage = false, "NO_CODEGEN")
+    calls.zipWithIndex.foreach { case ((_, call, isNull), i) =>
+      val (g, e) = (scalarCodegen.get(i), scalarInterp.get(i))
+      assert(String.valueOf(g) == String.valueOf(e),
+        s"$call diverges:\n  codegen:     $g\n  interpreted: $e")
+      assert((e == null) == isNull, s"$call returned $e")
+    }
     assert(aggCodegen == aggInterp,
       s"aggregate kernels diverge:\n  codegen:     $aggCodegen\n  interpreted: $aggInterp")
   }
@@ -481,7 +541,6 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(dim(bytes("FFD8FFE00000"), w = true) == null)
     assert(dim(Array.empty[Byte], w = true) == null)
     // SQL registration round-trips against the wrapper
-    ArrayExpressions.register(spark)
     val hexLit = real.map("%02X".format(_)).mkString
     val viaSql = spark.sql(s"SELECT jpeg_width(unhex('$hexLit')) AS w").collect()(0).getLong(0)
     assert(viaSql == 17L)
@@ -489,7 +548,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("cms_estimate reads count_min_sketch output in-plan: exact on a collision-free corpus, never under-counts") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     // 3 distinct tokens, known multiplicities; at width 27183 x depth 5
     // the chance of ANY pairwise collision among 3 tokens is ~1e-8 per
     // row pair, and the seed is fixed — estimates are deterministically
@@ -684,7 +742,6 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(ArrayExpressions.AHash64(
       org.apache.spark.sql.catalyst.expressions.Literal.create(Array.empty[Byte],
         org.apache.spark.sql.types.BinaryType)).eval(null) == 0L)
-    ArrayExpressions.register(spark)
     val viaSql = spark.sql("SELECT ahash64(encode('abcabc', 'UTF-8')) AS h").collect()(0).getLong(0)
     val viaWrapper = spark.range(1)
       .select(ArrayExpressions.ahash64(expr("encode('abcabc', 'UTF-8')")).as("h"))
@@ -707,18 +764,8 @@ class ExpressionsSpec extends AnyFunSuite {
     pairs.foreach { case (_, _, h) => assert(h >= 0 && h <= 3) }
   }
 
-  test("interpreted eval matches codegen result") {
-    val e = ArrayExpressions.SortedLongIntersectCount(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(Array(1L, 5L, 9L),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(Array(5L, 9L, 11L),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))
-    assert(e.eval(null) == 2)
-  }
-
   test("char_diversity matches a code-point reference, incl. astral chars and empty string") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rnd = new Random(7)
     // astral chars (musical G clef) count as ONE code point, where a
     // naive split("")/UTF-16 walk would see two surrogate halves
@@ -740,7 +787,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("unicode_normalize: NFC fuses combining marks, NFD round-trips, bad form rejected") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val decomposed = "éléphant" // e + COMBINING ACUTE, twice
     val precomposed = "éléphant"
     val r = Seq(decomposed).toDF("s")
@@ -763,7 +809,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("strip_accents removes marks from composed AND decomposed forms, keeps base letters") {
     import spark.implicits._
-    ArrayExpressions.register(spark)
     val rows = Seq(
       ("éléphant", "elephant"), // precomposed é
       ("éléphant", "elephant"), // decomposed e + U+0301

@@ -231,7 +231,6 @@ class LayoutSpec extends AnyFunSuite {
     // from-scratch whole-corpus store row-for-row and (b) keep its bucket
     // layout serving exchange-free bsig operations (multi-file buckets
     // lose the sort guarantee, not the partitioning)
-    graft.functions.ArrayExpressions.register(spark)
     val docs = Tables.load(spark, sf, "documents")
     def bands(d: org.apache.spark.sql.DataFrame) =
       Dedup.bandSignatures(Dedup.shingleFingerprints(d), 32, 4)

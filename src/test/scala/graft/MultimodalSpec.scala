@@ -49,7 +49,6 @@ class MultimodalSpec extends AnyFunSuite {
     import spark.implicits._
     val ids = Seq(3L, 17L, 40L)
     val stream = ids.flatMap(realJpeg).toArray
-    graft.functions.ArrayExpressions.register(spark)
     val st = Seq(Tuple1(stream)).toDF("payload")
       .select(graft.functions.ArrayExpressions.mjpegStats(col("payload")).as("st"))
       .head().getAs[scala.collection.Seq[Long]]("st")

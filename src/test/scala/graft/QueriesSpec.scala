@@ -922,7 +922,6 @@ class QueriesSpec extends AnyFunSuite {
     // sf0.01 — enough vectors (500) that every probe collects a
     // meaningful candidate set (~40-80 at 6 bits x 8 tables)
     val dir = "/root/testdata/sf0.01"
-    graft.functions.ArrayExpressions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
     val got = SparkEntry.queries("x48_lsh_ann_topk")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
@@ -1146,7 +1145,6 @@ class QueriesSpec extends AnyFunSuite {
     // a FRESH (no-store) computation of the same restricted search, so
     // staleness or key drift in the bucket/vector stores cannot hide
     val dir = "/root/testdata/sf0.01"
-    graft.functions.ArrayExpressions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
     val inc = graft.operators.IncrementalAnn.incrementalTopK(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
@@ -2595,7 +2593,6 @@ class QueriesSpec extends AnyFunSuite {
 
   test("x115 incremental IVFADC: store-backed search equals the fresh no-store computation; stores hold only the frozen day-0 slice") {
     import graft.operators.{IncrementalPq, ProductQuantization}
-    graft.functions.ArrayExpressions.register(spark)
     val emb = Tables.load(spark, sf, "embeddings")
     // store-backed (the x115 ledger path) vs the identical math derived
     // in one lineage with NO stores: staleness or key drift in any of
@@ -2625,7 +2622,6 @@ class QueriesSpec extends AnyFunSuite {
 
   test("x116 incremental IVFADC-R: store-backed re-rank equals the fresh no-store computation; the vectors store is frozen day-0 with codes-store-consistent home cells") {
     import graft.operators.{IncrementalPq, ProductQuantization}
-    graft.functions.ArrayExpressions.register(spark)
     val emb = Tables.load(spark, sf, "embeddings")
     // the x49 restriction-equality contract extended to the FOURTH
     // store: staleness or home-cell drift in the persisted vectors
@@ -2675,7 +2671,6 @@ class QueriesSpec extends AnyFunSuite {
 
   test("x117 multi-day maintenance: deltas partition the batch, compaction is value-neutral and file-bounded, tombstones drop deleted ids") {
     import graft.operators.IncrementalPq
-    graft.functions.ArrayExpressions.register(spark)
     val emb = Tables.load(spark, sf, "embeddings")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
@@ -2728,7 +2723,6 @@ class QueriesSpec extends AnyFunSuite {
 
   test("x119 multi-day re-rank: compacted index + exact refinement equals the fresh twin, with and without tombstones; vector compaction is file-bounded") {
     import graft.operators.IncrementalPq
-    graft.functions.ArrayExpressions.register(spark)
     val emb = Tables.load(spark, sf, "embeddings")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
@@ -2784,7 +2778,6 @@ class QueriesSpec extends AnyFunSuite {
 
   test("x116/x119 recall floor: incremental re-rank at the sized geometry holds recall@10 >= 0.95 vs exact on the clustered fixture") {
     import graft.operators.{IncrementalPq, ProductQuantization}
-    graft.functions.ArrayExpressions.register(spark)
     // the BASELINE.md Round 19 claim (x116 incremental IVFADC-R recall
     // ≡ the retrain default), pinned at fixture scale so a silent recall
     // regression in the incremental re-rank chain fails the suite (the
@@ -2826,7 +2819,6 @@ class QueriesSpec extends AnyFunSuite {
 
   test("pq store sweep hygiene: after building every x108-x120 store family, no stale-stamp catalog entries or layout dirs remain for this fixture") {
     import graft.operators.IncrementalPq
-    graft.functions.ArrayExpressions.register(spark)
     // build (or warm-hit) every persisted pq* family the engine mints
     // for a fixture dir: model stores, lists, vectors, day deltas (batch
     // and stream-fed), compacted generations (all variants), geometry

@@ -263,7 +263,6 @@ class StreamingAggSpec extends AnyFunSuite {
 
   test("x120 stream-fed compaction: stream-built day deltas equal batch-built ones, compact to the same generation, and the search equals x117 and the fresh twin") {
     import graft.operators.IncrementalPq
-    graft.functions.ArrayExpressions.register(spark)
     def canon(tbl: String) = spark.table(tbl)
       .select(concat_ws(",", col("c_id"), col("ccell"), col("sub"), col("cell")))
       .collect().map(_.getString(0)).toSet
@@ -304,7 +303,6 @@ class StreamingAggSpec extends AnyFunSuite {
 
   test("ingest daemon shape: persisted stream deltas outlive the run, register as the day store with no re-encode, and feed the compactor") {
     import graft.operators.IncrementalPq
-    graft.functions.ArrayExpressions.register(spark)
     def canon(tbl: String) = spark.table(tbl)
       .select(concat_ws(",", col("c_id"), col("ccell"), col("sub"), col("cell")))
       .collect().map(_.getString(0)).toSet
