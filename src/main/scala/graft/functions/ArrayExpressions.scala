@@ -219,14 +219,15 @@ object ArrayExpressions {
 
     def compute(arr: ArrayData): ArrayData = {
       val p = MinHash.P
-      val a = coefA; val b = coefB
-      val out = Array.fill(numPerms)(Long.MaxValue)
+      val a = coefA; val b = coefB; val k = numPerms
+      val out = new Array[Long](k)
+      java.util.Arrays.fill(out, Long.MaxValue)
       var i = 0
       val n = arr.numElements()
       while (i < n) {
         val h = { val m = arr.getLong(i) % p; if (m < 0) m + p else m }
         var j = 0
-        while (j < numPerms) {
+        while (j < k) {
           val v = (a(j) * h + b(j)) % p
           if (v < out(j)) out(j) = v
           j += 1
