@@ -764,6 +764,19 @@ class ExpressionsSpec extends AnyFunSuite {
     pairs.foreach { case (_, _, h) => assert(h >= 0 && h <= 3) }
   }
 
+  test("interpreted eval matches codegen result") {
+    val e = ArrayExpressions.SortedLongIntersectCount(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(Array(1L, 5L, 9L),
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)),
+      org.apache.spark.sql.catalyst.expressions.Literal.create(Array(5L, 9L, 11L),
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))
+    assert(e.eval(null) == 2)
+    // the same expression through its generated code, with no fallback to eval
+    val projection = org.apache.spark.sql.catalyst.expressions.codegen
+      .GenerateUnsafeProjection.generate(Seq(e))
+    assert(projection.apply(null).getInt(0) == 2)
+  }
+
   test("char_diversity matches a code-point reference, incl. astral chars and empty string") {
     import spark.implicits._
     val rnd = new Random(7)
